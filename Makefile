@@ -3,13 +3,24 @@
 
 STRESS_OPS ?= dedup_exact,dedup_minhash_lsh,dedup_simhash,dedup_pipeline,dedup_cross_corpus,dedup_cross_corpus_minhash,dedup_cross_corpus_indexed,corpus_train_shards
 
-.PHONY: test bench sweep stress stress-100 stress-r8 stress-r9 stress-r10
+.PHONY: test bench perfbench perfbench-trace sweep stress stress-100 stress-r8 stress-r9 stress-r10
 
 test:
 	python -m pytest tests/ -x -q
 
 bench:
 	python bench.py
+
+# the BENCHMARK.json workloads at their own settings: end-to-end
+# metrics (perfbench), per-layer metrics (perfbench-trace)
+SEED ?= 1
+TRACE = 0
+perfbench-trace: TRACE = 1
+
+perfbench perfbench-trace:
+	for w in batch_analytics stream_ingest; do \
+		python3 perfbench/run.py --workload $$w --seed $(SEED) --seconds 10 --trace $(TRACE) || exit 1; \
+	done
 
 # full-registry oracle sweep at sf0.01 (the driver-replica shape)
 sweep:

@@ -38,15 +38,22 @@ from datapipe_spark.streaming.sessions import apply_session_state
 
 GAP_MINUTES = 30
 
-# Micro-batches are small by construction (one drop ≈ one Kafka poll),
-# so wide shuffles just add task overhead; the stateful operators also
-# allocate one state store per shuffle partition per batch. The
-# production cluster would size this to the state volume. r5 A/B on
-# the 32-core box, all 8 streaming queries back-to-back (sf0.1):
-# 4→35.3s, 8→30.0s, 16→36.5s, 32→41.1s — 8 confirmed the plateau
-# (fewer starves replay parallelism, more multiplies state stores);
-# env override for re-measurement.
-STREAM_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+# Stateful shuffle width: one state store per shuffle partition per
+# micro-batch, and each one pays a fixed checkpoint-file cost whether
+# it holds state or not. On a local filesystem without libhadoop every
+# Hadoop file create or rename shells out (chmod for the file and its
+# .crc, readlink for each checkpoint rename, about 4.3 ms of CPU per
+# spawn on a 4-vCPU host), which comes to about 22 spawns per state
+# partition per micro-batch. Partitions beyond the session's cores add
+# only waves of that cost, so the width is the core count. The cap of
+# 8 keeps the plateau measured on 32 cores over the 8 streaming
+# queries (4→35.3 s, 8→30.0 s, 16→36.5 s, 32→41.1 s): wider multiplies
+# state stores faster than it adds replay parallelism. Spark pins the
+# width into each checkpoint's offset log, so a restart on another
+# core count keeps the checkpoint's own width.
+def _stream_width(spark: SparkSession) -> int:
+    return min(spark.sparkContext.defaultParallelism, 8)
+
 
 # State store provider for every stateful query (r12 verdict ask #1).
 # The default HDFS-backed provider keeps ALL state on the executor
@@ -103,14 +110,14 @@ ROCKSDB_CHANGELOG = os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "1") != "0"
 
 @contextmanager
 def _stream_shuffle(spark: SparkSession):
-    """Per-query streaming confs (shuffle width + state store
-    provider + RocksDB changelog checkpointing), set at runtime so
-    they hold under the external driver's vanilla session too, and
-    always restored."""
+    """Per-query streaming confs (shuffle width from the session's
+    cores + state store provider + RocksDB changelog checkpointing),
+    set at runtime so they hold under the external driver's vanilla
+    session too, and always restored."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_provider = spark.conf.get(_PROVIDER_CONF, None)
     prev_chlog = spark.conf.get(_CHANGELOG_CONF, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_stream_width(spark)))
     spark.conf.set(_PROVIDER_CONF, _STATE_STORE_PROVIDERS[STATE_STORE])
     if STATE_STORE == "rocksdb" and ROCKSDB_CHANGELOG:
         spark.conf.set(_CHANGELOG_CONF, "true")

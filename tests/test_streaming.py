@@ -62,6 +62,50 @@ def test_stateful_queries_run_on_rocksdb_state_store(spark, sf_dir):
     assert not any(f.endswith(".delta") for f in state_files)
 
 
+def test_stream_width_follows_session_cores(spark, sf_dir):
+    """The stateful shuffle width is the session's core count, capped at
+    8: it is set while the query runs (one state store per partition in
+    the checkpoint) and the session's own width comes back after."""
+    from types import SimpleNamespace
+
+    from datapipe_spark.util import scratch_root
+
+    on_32 = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=32))
+    assert jobs._stream_width(on_32) == 8
+    width = min(spark.sparkContext.defaultParallelism, 8)
+    assert jobs._stream_width(spark) == width
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "13")  # no width is 13
+    try:
+        with jobs._stream_shuffle(spark):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == str(width)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+        jobs.streaming_dedup_events(spark, sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+    state = os.path.join(scratch_root(), "dedup", "cp", "state", "0")
+    parts = {int(d) for d in os.listdir(state) if d.isdigit()}
+    assert parts == set(range(width))
+
+
+@pytest.mark.parametrize("width", [1, 8])
+@pytest.mark.parametrize(
+    "query_fn, sql",
+    [
+        (jobs.streaming_dedup_events, jobs.STREAMING_DEDUP_SQL),
+        (jobs.streaming_sessionize_stateful, ev.SESSIONIZE_SQL),
+    ],
+    ids=["dedup", "sessionize_stateful"],
+)
+def test_stateful_results_are_width_invariant(spark, sf_dir, monkeypatch, query_fn, sql, width):
+    """State partitioning must not change results: the stateful heads
+    equal their DuckDB oracles at any shuffle width."""
+    monkeypatch.setattr(jobs, "_stream_width", lambda _spark: width)
+    compare_to_oracle(spark, query_fn, sql, sf_dir)
+
+
 def test_streaming_snapshot_ingest_exactly_once_acid_appends(spark, sf_dir):
     """Kafka→Iceberg parity (T10 on an ACID table): the stream lands
     in the snapshot table with exactly-once content, `.history`
