@@ -3,7 +3,7 @@
 
 STRESS_OPS ?= dedup_exact,dedup_minhash_lsh,dedup_simhash,dedup_pipeline,dedup_cross_corpus,dedup_cross_corpus_minhash,dedup_cross_corpus_indexed,corpus_train_shards
 
-.PHONY: test bench perfbench perfbench-trace sweep stress stress-100 stress-r8 stress-r9 stress-r10
+.PHONY: test bench perfbench perfbench-trace perfbench-ab sweep stress stress-100 stress-r8 stress-r9 stress-r10
 
 test:
 	python -m pytest tests/ -x -q
@@ -21,6 +21,14 @@ perfbench perfbench-trace:
 	for w in batch_analytics stream_ingest; do \
 		python3 perfbench/run.py --workload $$w --seed $(SEED) --seconds 10 --trace $(TRACE) || exit 1; \
 	done
+
+# alternating parent/change pairs of one workload at the benchmark's
+# settings (seeds SEED .. SEED+PAIRS-1), with the gain-claim rule:
+#   make perfbench-ab PARENT=../parent PAIRS=10 WORKLOAD=batch_analytics SEED=101
+PAIRS ?= 10
+WORKLOAD ?= batch_analytics
+perfbench-ab:
+	python3 scripts/perfbench_ab.py --parent $(PARENT) --pairs $(PAIRS) --workload $(WORKLOAD) --seed $(SEED)
 
 # full-registry oracle sweep at sf0.01 (the driver-replica shape)
 sweep:

@@ -1507,9 +1507,11 @@ def scd2_keyed_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compacted cache), and the broadcast semi join trims to the
     exact key set. Oracle (``CDC_SCD2_HISTORY_KEYED_SQL``): the batch
     SCD2 build filtered to the same keys."""
+    from datapipe_spark.sources.tables import load_table
+
     store = _cached_scd2_store(spark, sf_dir)
     keys = (
-        spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+        load_table(spark, sf_dir, "orders")
         .select(F.col("o_orderkey").alias("id"))
         .filter(F.col("id") % 53 == 0)
     )

@@ -104,6 +104,17 @@ def _walk_parquet(root: str, rel_to: str) -> list[str]:
     return sorted(out)
 
 
+def _footer_rows(table_dir: str, rels: list[str]) -> int:
+    """Row count of table-relative parquet files, summed from their
+    footers on the driver — no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.ParquetFile(os.path.join(table_dir, rel)).metadata.num_rows
+        for rel in rels
+    )
+
+
 def _manifest(table_dir: str, version: int) -> list[str]:
     """The file set composing ``version``, relative to ``table_dir``.
     Pre-r13 snapshots carry no ``files`` key — their version dir is
@@ -250,12 +261,10 @@ def _commit_locked(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staged)
     new_files = _walk_parquet(staged, table_dir)
-    # staged row count: zero-column scan of the NEW files only —
-    # never re-reads the base table (an empty increment stages no
-    # files at all — a legal commit, e.g. an empty micro-batch)
-    n_new = (
-        df.sparkSession.read.parquet(staged).count() if new_files else 0
-    )
+    # staged row count: summed from the footers of the NEW files the
+    # writer just staged — never re-reads the base table, and an empty
+    # increment (no files staged, e.g. an empty micro-batch) counts 0
+    n_new = _footer_rows(table_dir, new_files)
     files = parent_files + new_files
     row_count = n_new + (
         int(parent_meta.get("row_count", 0)) if parent_meta else 0
@@ -617,12 +626,13 @@ def _cached_events_snapshot(spark: SparkSession, sf_dir: str) -> str:
     ``.partitions`` record/byte columns need no such pin."""
     from pyspark.sql import functions as F
 
+    from datapipe_spark.sources.tables import load_table
     from datapipe_spark.util import build_once
 
     src = os.path.join(sf_dir, "events.parquet")
 
     def _build(tmp: str) -> None:
-        ev = spark.read.parquet(src).withColumn(
+        ev = load_table(spark, sf_dir, "events").withColumn(
             "event_date", F.to_date("ts").cast("string")
         )
         split = F.date_add(F.min(F.to_date("ts")), SNAPSHOT_SPLIT_DAYS)
@@ -927,8 +937,6 @@ def overwrite_partitions(
     replaced, not appended). The dropped parent files' row counts are
     read from their footers (bounded by the touched partitions) to
     keep the committed ``row_count`` exact."""
-    import pyarrow.parquet as pq
-
     from datapipe_spark.operators.lease import writer_lease
 
     if not partition_by:
@@ -957,13 +965,8 @@ def overwrite_partitions(
         kept, dropped = [], []
         for rel in _manifest(table_dir, prev):
             (dropped if _file_partition(rel) in touched else kept).append(rel)
-        n_new = (
-            df.sparkSession.read.parquet(staged).count() if new_files else 0
-        )
-        n_dropped = sum(
-            pq.ParquetFile(os.path.join(table_dir, rel)).metadata.num_rows
-            for rel in dropped
-        )
+        n_new = _footer_rows(table_dir, new_files)
+        n_dropped = _footer_rows(table_dir, dropped)
         meta = {
             "version": version, "parent": prev,
             "committed_at": time.time(),
@@ -1038,10 +1041,11 @@ def snapshot_partition_overwrite_meta(
     attests the overwrite touched exactly the backfilled partition."""
     from pyspark.sql import functions as F
 
+    from datapipe_spark.sources.tables import load_table
     from datapipe_spark.util import fresh_dir
 
     table = fresh_dir("snap_pow")
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev = load_table(spark, sf_dir, "events")
     d0 = ev.agg(F.min(F.to_date("ts")).alias("d")).collect()[0]["d"]
     base = (
         ev.withColumn("d", F.to_date("ts"))

@@ -18,9 +18,11 @@ sees a DataFrame, so the swap is contained here.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -31,6 +33,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # TIMESTAMP_NTZ and is kept as-is; arithmetic goes through
 # ``functions.epoch_us`` which accepts both LTZ and NTZ).
 _NANOS_TS_COLS = {"events": ["ts"]}
+
+# Spark's own inferred schema per table file, keyed by the file's
+# identity: a bare ``spark.read.parquet`` submits one footer-inference
+# job per call (~60 ms of CPU), so each file is inferred once and read
+# with ``.schema(...)`` after that. A rewritten file changes size or
+# mtime and is inferred again.
+_SCHEMAS: dict[str, tuple[tuple[int, int], StructType]] = {}
 
 
 def _ensure_session_confs(spark: SparkSession, name: str) -> None:
@@ -69,13 +78,26 @@ def ensure_session_confs(spark: SparkSession, name: str = "events") -> None:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing timestamp columns."""
     _ensure_session_confs(spark, name)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for c in _NANOS_TS_COLS.get(name, []):
         if dict(df.dtypes).get(c) == "bigint":
             # integral division: ns epochs exceed 2^53, double math would
             # round the low microseconds
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    st = os.stat(path)
+    if not stat.S_ISREG(st.st_mode):
+        # a table directory (``scripts/scale_smoke.py``'s scaled copies)
+        # has no cheap identity: its parts change under a fixed mtime
+        return spark.read.parquet(path)
+    ident = (st.st_size, st.st_mtime_ns)
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != ident:
+        hit = _SCHEMAS[path] = (ident, spark.read.parquet(path).schema)
+    return spark.read.schema(hit[1]).parquet(path)
 
 
 def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:

@@ -159,6 +159,21 @@ def _run(writer, checkpoint: str):
     return q
 
 
+def _run_to_sink(spark: SparkSession, stream: DataFrame, name: str) -> DataFrame:
+    """Run ``stream`` into a parquet file sink in a fresh scratch dir
+    ``name`` and read the sink back. The stream's schema is the sink's
+    schema, so the read passes it instead of paying a footer-inference
+    job."""
+    out = src.fresh_dir(name)
+    sink = os.path.join(out, "sink")
+    with _stream_shuffle(spark):
+        _run(
+            stream.writeStream.format("parquet").option("path", sink),
+            os.path.join(out, "cp"),
+        )
+    return spark.read.schema(stream.schema).parquet(sink)
+
+
 def _events_stream(spark: SparkSession, sf_dir: str, sentinel: bool) -> DataFrame:
     # one shared drop-set (sentinel variant) serves every non-dup query;
     # consumers that don't want flush rows filter on event_type.
@@ -246,9 +261,6 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T2 (event-time form) + T3: ``session_window`` with watermark —
     sessions close and append once the watermark passes their gap
     boundary; the flush sentinel closes the tail for bounded replay."""
-    out = src.fresh_dir("sessionize")
-    sink = os.path.join(out, "sink")
-
     sessions = (
         _events_stream(spark, sf_dir, sentinel=True)
         .withWatermark("ts", "1 second")
@@ -272,15 +284,9 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("session_window")
     )
-    with _stream_shuffle(spark):
-        _run(
-            sessions.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-
     from pyspark.sql.window import Window
 
-    emitted = spark.read.parquet(sink).filter(F.col("_flush") == 0)
+    emitted = _run_to_sink(spark, sessions, "sessionize").filter(F.col("_flush") == 0)
     seq = Window.partitionBy("user_id").orderBy("session_start")
     return _ntz(emitted.select(
         "user_id",
@@ -300,17 +306,9 @@ def streaming_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame
     """T2 (the reference's own form): per-user session state machine via
     ``applyInPandasWithState`` (flatMapGroupsWithState, realtime
     design.md:126-141,311-383). See ``streaming.sessions``."""
-    out = src.fresh_dir("sessionize_state")
-    sink = os.path.join(out, "sink")
-
     events = _events_stream(spark, sf_dir, sentinel=True)
     sessions = apply_session_state(events, gap_minutes=GAP_MINUTES)
-    with _stream_shuffle(spark):
-        _run(
-            sessions.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-    return _ntz(spark.read.parquet(sink))
+    return _ntz(_run_to_sink(spark, sessions, "sessionize_state"))
 
 
 def streaming_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,17 +321,9 @@ def streaming_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     the production form would arm a TTL timeout to bound it."""
     from datapipe_spark.streaming.sessions import apply_attribution_state
 
-    out = src.fresh_dir("attribution_state")
-    sink = os.path.join(out, "sink")
-
     events = _events_stream(spark, sf_dir, sentinel=True)
     attributed = apply_attribution_state(events)
-    with _stream_shuffle(spark):
-        _run(
-            attributed.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-    return _ntz(spark.read.parquet(sink))
+    return _ntz(_run_to_sink(spark, attributed, "attribution_state"))
 
 
 def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -344,21 +334,12 @@ def streaming_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch window's LEAD order, so counts and probabilities equal the
     batch form and its oracle. The aggregation runs over the sink's
     adjacency rows — output-sized, |event_types|² groups."""
+    from datapipe_spark.plans.behavior import transition_matrix
     from datapipe_spark.streaming.sessions import apply_transition_state
-
-    out = src.fresh_dir("transition_state")
-    sink = os.path.join(out, "sink")
 
     events = _events_stream(spark, sf_dir, sentinel=True)
     pairs = apply_transition_state(events)
-    with _stream_shuffle(spark):
-        _run(
-            pairs.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-    from datapipe_spark.plans.behavior import transition_matrix
-
-    return transition_matrix(spark.read.parquet(sink))
+    return transition_matrix(_run_to_sink(spark, pairs, "transition_state"))
 
 
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,9 +350,6 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming query). Unbounded-state form here; the 100 TB path
     bounds state with ``dropDuplicatesWithinWatermark`` (same call
     shape)."""
-    out = src.fresh_dir("dedup")
-    sink = os.path.join(out, "sink")
-
     redelivered = (
         _events_stream(spark, sf_dir, sentinel=True)
         .filter(F.col("event_type") != src.SENTINEL_TYPE)
@@ -382,12 +360,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("_n", "_copy")
     )
     deduped = redelivered.dropDuplicates(["event_id"])
-    with _stream_shuffle(spark):
-        _run(
-            deduped.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-    return _ntz(spark.read.parquet(sink))
+    return _ntz(_run_to_sink(spark, deduped, "dedup"))
 
 
 def streaming_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -446,17 +419,10 @@ def streaming_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFram
     from datapipe_spark.sources.snapshot_stream import read_snapshot_stream
 
     tbl = _cached_events_snapshot(spark, sf_dir)
-    out = src.fresh_dir("snap_feed")
-    sink = os.path.join(out, "sink")
     feed = read_snapshot_stream(spark, tbl).select(
         "event_id", "user_id", "event_type", "event_date"
     )
-    with _stream_shuffle(spark):
-        _run(
-            feed.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-    return spark.read.parquet(sink)
+    return _run_to_sink(spark, feed, "snap_feed")
 
 
 STREAMING_SNAPSHOT_FEED_SQL = """
@@ -531,19 +497,11 @@ def streaming_error_purchase_windows(spark: SparkSession, sf_dir: str) -> DataFr
     ``streaming_purchase_attribution``, whose per-user last-touch
     state is the applyInPandasWithState form of a DIFFERENT join
     (as-of, unbounded lookback)."""
-    out = src.fresh_dir("ss_interval_join")
-    sink = os.path.join(out, "sink")
-
     events = _events_stream(spark, sf_dir, sentinel=True).filter(
         F.col("event_type") != src.SENTINEL_TYPE
     )
     joined = interval_join_error_purchases(events)
-    with _stream_shuffle(spark):
-        _run(
-            joined.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-    return _ntz(spark.read.parquet(sink))
+    return _ntz(_run_to_sink(spark, joined, "ss_interval_join"))
 
 
 def streaming_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,9 +796,6 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     state); the MV pattern in ``streaming_funnel_daily`` covers that —
     here the window carries counts and exact money sums only.
     """
-    out = src.fresh_dir("hourly_window")
-    sink = os.path.join(out, "sink")
-
     windows = (
         _events_stream(spark, sf_dir, sentinel=True)
         .withWatermark("ts", "1 second")
@@ -861,12 +816,7 @@ def streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             "_flush",
         )
     )
-    with _stream_shuffle(spark):
-        _run(
-            windows.writeStream.format("parquet").option("path", sink),
-            os.path.join(out, "cp"),
-        )
-    emitted = spark.read.parquet(sink).filter(F.col("_flush") == 0)
+    emitted = _run_to_sink(spark, windows, "hourly_window").filter(F.col("_flush") == 0)
     return emitted.select(
         F.to_date("window_start").alias("event_date"),
         F.hour("window_start").alias("event_hour"),

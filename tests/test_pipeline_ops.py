@@ -865,6 +865,95 @@ def test_overwrite_partitions_replaces_only_touched(spark):
     assert snap.read_snapshot(spark, table).count() == 8
 
 
+def _jobs_submitted(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, the number of
+    Spark jobs it submitted)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_EV_SCHEMA = "id long, event_date string, value long"
+
+
+@pytest.mark.parametrize(
+    "case, rows, row_count",
+    [
+        # a 4-row increment over the 9 committed rows
+        ("append", [(100 + i, f"2024-01-0{1 + i % 2}", i) for i in range(4)], 13),
+        # an empty increment stages no files
+        ("append", [], 9),
+        # 2 rows replace the 3 of day 2
+        ("overwrite_partitions", [(100, "2024-01-02", 7), (101, "2024-01-02", 8)], 8),
+    ],
+    ids=["append", "empty-increment", "overwrite-partitions"],
+)
+def test_commit_row_count_from_staged_footers(spark, case, rows, row_count):
+    """A commit counts its staged rows from the footers of the files it
+    just wrote: the write is its only Spark job, and ``row_count`` stays
+    exact for appends, empty increments and partition overwrites."""
+    from datapipe_spark.operators import snapshots as snap
+
+    table = fresh_dir("test_snapshots_footer_count")
+    base = spark.createDataFrame(
+        [(i, f"2024-01-0{1 + i % 3}", i * 10) for i in range(9)], _EV_SCHEMA
+    )
+    snap.commit_snapshot(base, table, partition_by=("event_date",))
+    inc = spark.createDataFrame(rows, _EV_SCHEMA)
+    if case == "append":
+        commit = lambda: snap.commit_snapshot(  # noqa: E731
+            inc, table, mode="append", partition_by=("event_date",)
+        )
+    else:
+        commit = lambda: snap.overwrite_partitions(  # noqa: E731
+            inc, table, ("event_date",)
+        )
+    v, n_jobs = _jobs_submitted(spark, commit)
+    assert (v, n_jobs) == (2, 1)
+    head = snap.history(table)[-1]
+    staged = [f for f in head["files"] if f.startswith("v00002")]
+    assert bool(staged) == bool(rows)
+    assert head["row_count"] == row_count
+    assert snap.read_snapshot(spark, table).count() == row_count
+
+
+def test_load_table_infers_each_file_schema_once(spark, tmp_path):
+    """``load_table`` pays Spark's footer-inference job once per table
+    file: a second load of the same file submits no job, and a file
+    rewritten with another schema is inferred again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datapipe_spark.sources.tables import load_table
+
+    path = str(tmp_path / "orders.parquet")
+    pq.write_table(pa.table({"o_orderkey": [1, 2, 3]}), path)
+    first = load_table(spark, str(tmp_path), "orders")
+    again, n_jobs = _jobs_submitted(
+        spark, lambda: load_table(spark, str(tmp_path), "orders")
+    )
+    assert n_jobs == 0
+    assert again.schema == first.schema
+    assert again.count() == 3
+
+    pq.write_table(
+        pa.table({"o_orderkey": [4, 5], "o_comment": ["a", "b"]}), path
+    )
+    rewritten = load_table(spark, str(tmp_path), "orders")
+    assert rewritten.columns == ["o_orderkey", "o_comment"]
+    assert sorted(r["o_orderkey"] for r in rewritten.collect()) == [4, 5]
+
+
 def test_snapshot_tags_block_expiry_and_resolve_reads(spark):
     """Iceberg refs: a tagged version reads by name, survives every
     expiry (a retention root like the pointer target, its files kept
