@@ -36,11 +36,11 @@ reach filter does, and both verify the same exact jaccard.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from datapipe_spark.operators import journal
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.operators.dedup import (
     JACCARD_THRESHOLD,
@@ -72,7 +72,7 @@ def _write_parts(
     # the append path's per-batch wall was dominated by sequential
     # sub-second jobs). Concurrent first-touch of a cached partition is
     # safe: the block manager computes it once and blocks other readers.
-    from concurrent.futures import ThreadPoolExecutor
+    from datapipe_spark.util import run_concurrently
 
     def _mem() -> None:
         mem.select("doc_id", "ghash", "rep_id").write.mode(mode).parquet(
@@ -95,13 +95,7 @@ def _write_parts(
             _p(index_dir, "bands")
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [pool.submit(fn) for fn in (_mem, _sigs, _bands)]
-        for f in futs:
-            f.result()
-
-
-_JOURNAL = "commit-pending.json"
+    run_concurrently(mem.sparkSession, _mem, _sigs, _bands)
 
 
 def _prepare_commit(
@@ -112,29 +106,19 @@ def _prepare_commit(
     commit_barrier=None,
 ) -> str:
     """First half of the atomic append commit (the r7 advisory's torn-
-    append fix): write the batch's mem/sigs/bands delta files into a
-    hidden ``.staging-*`` dir — readers address the part dirs directly,
-    so staged data is invisible — then durably record the commit as a
-    journal (atomic rename): the exact file moves plus the meta the
-    commit must leave behind. Once the journal exists the commit WILL
-    happen: ``_roll_forward`` (called by every append/probe entry)
-    finishes it idempotently after any crash. Returns the journal path."""
-    import json
-    import uuid
-
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
+    append fix; protocol in ``operators/journal.py``): write the
+    batch's mem/sigs/bands delta files into a hidden staging dir, then
+    journal the exact file moves plus the meta the commit must leave
+    behind. Once the journal exists the commit WILL happen:
+    ``_roll_forward`` (called by every append/probe entry) finishes it
+    idempotently after any crash. Returns the journal path."""
+    token, stage = journal.new_stage(index_dir)
     _write_parts(mem, sigs, stage, "overwrite")
-    moves = []
-    for part in ("mem", "sigs", "bands"):
-        sdir = _p(stage, part)
-        for name in sorted(os.listdir(sdir)):
-            if name.startswith("part-"):
-                # token prefix keeps names unique in the live dir even
-                # across replays of the same batch
-                moves.append(
-                    [os.path.join(sdir, name), _p(index_dir, f"{part}/{token}-{name}")]
-                )
+    moves = [
+        mv
+        for part in ("mem", "sigs", "bands")
+        for mv in journal.staged_moves(_p(stage, part), _p(index_dir, part), token)
+    ]
     # r14 (guide §2.6): ``new_meta`` may be a zero-arg callable resolved
     # only here — AFTER the staged writes — so the caller can overlap
     # its meta-count jobs with the staging writes on a thread pool
@@ -157,107 +141,12 @@ def _prepare_commit(
     )
 
 
-def _commit_journal(index_dir: str, journal: dict) -> str:
-    """THE commit point, spelled once for every writer (r12 review —
-    five hand-repeated copies drifted once already, dropping a meta
-    key): journal JSON written aside + one fsynced atomic rename
-    (power-loss durable — r12 review). Past the rename the commit is
-    durable and WILL be completed by ``_roll_forward``. Returns the
-    journal path."""
-    from datapipe_spark.util import atomic_write_json
-
-    jp = _p(index_dir, _JOURNAL)
-    atomic_write_json(jp, journal)
-    return jp
-
-
-def _roll_forward(index_dir: str, sweep: bool = False) -> bool:
-    """Second half / crash recovery: if a commit journal exists, finish
-    its commit — move every staged file still in the staging dir (a
-    move whose source is gone already happened and its destination
-    must exist — source AND destination both missing means the staged
-    batch was destroyed after the commit point, which can never be
-    completed or replayed, so raise instead of silently advancing the
-    watermark past it), replay any journaled whole-dir swaps the same
-    way, rewrite ``meta.json`` from the journal snapshot, then retire
-    the journal. Every step is idempotent, so a crash anywhere inside
-    roll-forward just rolls forward again on the next entry.
-
-    ``sweep=True`` (WRITER entries only — single writer per index by
-    contract) additionally deletes journal-less ``.staging-*`` dirs:
-    debris from a crash BEFORE the commit point, whose batch never
-    committed (watermark unmoved ⟹ it will be replayed wholesale).
-    Readers (the probe path) must NOT sweep — a probe running beside
-    an in-flight pre-journal append would delete the live writer's
-    staging and lose the increment (the scd2 r9 advisory, applied to
-    the sibling journal). Replay runs under the store's recovery lock
-    (r12 review): readers roll forward too, and two processes
-    replaying one journal concurrently could interleave a swap's
-    rename pair destructively. Returns True if a pending commit was
-    completed."""
-    jp = _p(index_dir, _JOURNAL)
-    pending = False
-    if os.path.exists(jp):
-        from datapipe_spark.operators.lease import recovery_guard
-
-        with recovery_guard(index_dir):
-            pending = _replay_journal(index_dir)
-    if sweep:
-        for name in os.listdir(index_dir):
-            if name.startswith(".staging-"):
-                shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
-    return pending
-
-
-def _replay_journal(index_dir: str) -> bool:
-    """The replay body of ``_roll_forward``, called ONLY under the
-    recovery lock; re-checks journal existence (the winner of the lock
-    race replays, losers find it retired)."""
-    import json
-
-    jp = _p(index_dir, _JOURNAL)
-    pending = os.path.exists(jp)
-    if pending:
-        with open(jp) as f:
-            j = json.load(f)
-        for src, dst in j["moves"]:
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-            elif not os.path.exists(dst):
-                raise RuntimeError(
-                    f"index commit journal at {jp} names a move whose "
-                    f"source and destination are both missing "
-                    f"({src} -> {dst}): the staged batch was destroyed "
-                    "after the commit point and cannot be completed or "
-                    "replayed. Refusing to advance the watermark past "
-                    "a lost batch."
-                )
-        for src, live in j.get("swaps", []):
-            old = live + ".old"
-            if os.path.exists(src):
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(live):
-                    os.rename(live, old)
-                os.rename(src, live)
-            elif not os.path.exists(live):
-                raise RuntimeError(
-                    f"index commit journal at {jp} names a swap whose "
-                    f"staged source and live target are both missing "
-                    f"({src} -> {live}): the staged rewrite was "
-                    "destroyed after the commit point. Refusing to "
-                    "complete a torn commit."
-                )
-            shutil.rmtree(old, ignore_errors=True)
-        # deletes land after moves/swaps (the scd2 journal posture):
-        # a purge folding the tombstone queue clears its files here —
-        # removing an already-removed file is the replayed state
-        for path in j.get("deletes", []):
-            if os.path.exists(path):
-                os.remove(path)
-        _write_meta(index_dir, j["meta"])
-        os.remove(jp)
-    return pending
+# the commit point and its roll-forward (``operators/journal.py``):
+# module names so tests can crash a commit at either half. A writer
+# entry passes sweep=True; the probe (a reader) never sweeps.
+_JOURNAL = journal.JOURNAL
+_commit_journal = journal.commit
+_roll_forward = journal.roll_forward
 
 
 def _meta_hash_of(sigs: DataFrame) -> str:
@@ -283,13 +172,7 @@ def build_minhash_index(
     resurrect the old batch-id watermark, silently skipping future
     appends.
     """
-    if os.path.isdir(index_dir):
-        jp = _p(index_dir, _JOURNAL)
-        if os.path.exists(jp):
-            os.remove(jp)
-        for name in os.listdir(index_dir):
-            if name.startswith(".staging-") or name == "tombstones":
-                shutil.rmtree(os.path.join(index_dir, name), ignore_errors=True)
+    journal.reset(index_dir)
     mem = _collapse_exact(docs.select("doc_id", "text")).persist()
     reps = _rep_docs(docs, mem)
     sigs = (
@@ -473,11 +356,15 @@ def append_minhash_index(
     # run the counts on a helper pool so they overlap the staging
     # writes (the journal resolves the meta callable only after every
     # staged write has finished, keeping the commit-point semantics).
+    # Each count is wrapped on this thread so its job keeps the
+    # caller's job group (``util.run_concurrently``).
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=2) as cpool:
-        nd_f = cpool.submit(mem.count)
-        nr_f = cpool.submit(sigs.count)
+        nd_f = cpool.submit(inheritable_thread_target(spark)(mem.count))
+        nr_f = cpool.submit(inheritable_thread_target(spark)(sigs.count))
 
         def _new_meta() -> dict:
             nm = {
@@ -520,8 +407,8 @@ def compact_minhash_index(
 
     Content-preserving by contract: row sets identical, ``meta.json``
     (counts + exactly-once watermark) untouched; all three part
-    rewrites are staged under one ``.staging-*`` dir and committed as
-    a SINGLE journaled swaps entry (the scd2 r9 compaction advisory
+    rewrites are staged under one staging dir and committed as a
+    SINGLE journaled swaps entry (the scd2 r9 compaction advisory
     applied here too: a bare rename-pair swap could crash between
     renames and leave a part dir missing entirely), so a reader
     ENTERING the index sees the old index or the new one, never a mix
@@ -537,7 +424,6 @@ def compact_minhash_index(
     gated in tests. Returns per-part (files_before, files_after).
     """
     import json
-    import uuid
 
     from datapipe_spark.operators.maintenance import (
         TARGET_FILE_BYTES,
@@ -570,14 +456,13 @@ def compact_minhash_index(
     # compact below (the purge rewrite sizes them by plan partitions,
     # not by bytes). A custom target_bytes re-clusters to honor it.
     skip_bands = folded and target_bytes is None
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
+    _token, stage = journal.new_stage(index_dir)
     # r14 (guide §2.6): the three part rewrites read disjoint live dirs
     # and share no uncached subtree — run them concurrently so each
     # rewrite's planning + write overlaps the others instead of
     # serializing; the journal below still commits only after every
     # staged rewrite finished.
-    from concurrent.futures import ThreadPoolExecutor
+    from datapipe_spark.util import run_concurrently
 
     swaps = []
     jobs = []
@@ -600,9 +485,7 @@ def compact_minhash_index(
             )
         )
         swaps.append([os.path.join(stage, "bands"), live])
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        for f in [pool.submit(j) for j in jobs]:
-            f.result()
+    run_concurrently(spark, *jobs)
     with open(_p(index_dir, "meta.json")) as f:
         meta = json.load(f)
     _commit_journal(index_dir, {"moves": [], "swaps": swaps, "meta": meta})
@@ -847,28 +730,17 @@ def queue_purge_minhash_index(
     physically and clear it — N small requests cost N tiny appends
     plus one batched rewrite. Journaled like every append. Returns the
     number of ids queued."""
-    import json
-    import uuid
-
     _roll_forward(index_dir, sweep=True)
     meta = _meta(spark, index_dir)
     kb = purge_ids.select("doc_id").distinct().localCheckpoint(eager=True)
     n = kb.count()
     if n == 0:
         return 0
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
-    kb.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage, "tombstones")
+    token, stage = journal.new_stage(index_dir)
+    kb.coalesce(1).write.mode("overwrite").parquet(_p(stage, "tombstones"))
+    moves = journal.staged_moves(
+        _p(stage, "tombstones"), _p(index_dir, "tombstones"), token
     )
-    moves = []
-    sdir = os.path.join(stage, "tombstones")
-    for name in sorted(os.listdir(sdir)):
-        if name.startswith("part-") and name.endswith(".parquet"):
-            moves.append(
-                [os.path.join(sdir, name),
-                 _p(index_dir, f"tombstones/{token}-{name}")]
-            )
     new_meta = {**meta, "n_tombstones": int(meta.get("n_tombstones", 0)) + n}
     _commit_journal(index_dir, {"moves": moves, "swaps": [], "meta": new_meta})
     _roll_forward(index_dir, sweep=True)
@@ -955,9 +827,7 @@ def purge_minhash_index(
 
     Returns ``{"purged_docs", "dropped_reps", "renamed_reps"}``.
     """
-    import json
     import math
-    import uuid
 
     from datapipe_spark.operators.maintenance import TARGET_FILE_BYTES, table_bytes
 
@@ -1038,8 +908,7 @@ def purge_minhash_index(
     ).collect()[0]
     dropped, renamed = int(stat["dropped"]), int(stat["renamed"])
 
-    token = uuid.uuid4().hex[:12]
-    stage = _p(index_dir, f".staging-{token}")
+    _token, stage = journal.new_stage(index_dir)
     mem_out, sigs_out, bands_out = _purge_rewrite_plans(
         spark, index_dir, probe, trans, gated
     )
@@ -1053,7 +922,7 @@ def purge_minhash_index(
     # parts joined against checkpointed small frames (kb/trans) — no
     # shared uncached subtree — so they run concurrently; the journal
     # below still commits only after all three finished.
-    from concurrent.futures import ThreadPoolExecutor
+    from datapipe_spark.util import run_concurrently
 
     def _w_mem() -> None:
         mem_out.write.mode("overwrite").parquet(os.path.join(stage, "mem"))
@@ -1069,9 +938,7 @@ def purge_minhash_index(
             .parquet(os.path.join(stage, "bands"))
         )
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for f in [pool.submit(fn) for fn in (_w_mem, _w_sigs, _w_bands)]:
-            f.result()
+    run_concurrently(spark, _w_mem, _w_sigs, _w_bands)
 
     new_meta = dict(meta)
     new_meta["n_docs"] = int(meta["n_docs"]) - n_found

@@ -81,7 +81,7 @@ def compact_parquet_into(
     swap: write the ⌈size/target⌉-file rewrite of ``path`` into
     ``out`` and stop. Callers that own a commit journal (the SCD2
     store, the band index) stage the rewrite under their hidden
-    ``.staging-*`` dir and commit it as a journaled swap instead of
+    staging dir and commit it as a journaled swap instead of
     the bare rename pair — a crash can then never leave the live dir
     missing (r9 advisory on ``scd2_compact_closed``)."""
     df = spark.read.parquet(path)

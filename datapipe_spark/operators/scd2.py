@@ -26,7 +26,8 @@ Layout under ``dim_dir``::
                          so footer min/max prunes ``scd2_as_of``
                          filters); compactable via
                          ``scd2_compact_closed``
-    commit-pending.json  the commit journal (see below)
+    (commit journal)     present only while a commit completes (see
+                         below)
 
 The current/closed split is the hive form of partitioning by
 ``is_current``: the hot "current dimension" read touches one compact
@@ -36,18 +37,18 @@ slice; history files are write-once. Full SCD2 history =
 ``scd2_dimension_store`` drives build + two increments end-to-end
 under that hash oracle.
 
-Exactly-once via a journaled two-phase commit (the ``dedup_index``
-``_prepare_commit``/``_roll_forward`` pattern — r8 advisory: the prior
-sequential closed-rename → current-swap → meta left a crash window in
-which an increment's closed versions were reader-visible while the
-same versions were still open in ``current/``). An upsert stages its
-closed delta files AND its rewritten bucket dirs under an invisible
-``.staging-*`` dir, then durably records ONE journal (atomic rename)
-naming the closed-file moves, the per-bucket dir swaps, and the meta
-(watermark) the commit must leave behind. Once the journal exists the
-commit WILL complete: ``_roll_forward`` — run at every read/write
-entry — finishes it idempotently after any crash, and meta advances
-only inside that same journaled step, so readers never see a torn
+Exactly-once via the journaled two-phase commit every persisted store
+shares (``operators/journal.py`` — r8 advisory: the prior sequential
+closed-rename → current-swap → meta left a crash window in which an
+increment's closed versions were reader-visible while the same
+versions were still open in ``current/``). An upsert stages its closed
+delta files AND its rewritten bucket dirs under an invisible staging
+dir, then durably records ONE journal (atomic rename) naming the
+closed-file moves, the per-bucket dir swaps, and the meta (watermark)
+the commit must leave behind. Once the journal exists the commit WILL
+complete: ``_roll_forward`` — run at every read/write entry — finishes
+it idempotently after any crash, and meta advances only inside that
+same journaled step, so readers never see a torn
 increment: crash before the journal leaves zero visible change (the
 batch replays wholesale against the unchanged store); crash after it
 is completed by the next entry before anything else runs. A replayed
@@ -71,15 +72,14 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datapipe_spark.operators import journal
 from datapipe_spark.operators.lease import guards_writer
-from datapipe_spark.util import write_empty_parquet
+from datapipe_spark.util import run_concurrently, write_empty_parquet
 
 # stored rows additionally carry _written_inc — the batch that WROTE
 # the version (closed rows also carry `inc`, the batch that CLOSED
@@ -181,7 +181,7 @@ SCD2_DEFAULT_BUCKETS = 8
 # which `scd2_rebucket` may change after the files are written
 SCD2_CLOSED_KEY_BUCKETS = 1024
 
-_JOURNAL = "commit-pending.json"
+_JOURNAL = journal.JOURNAL
 
 # store layout version, recorded in meta.json at init and REQUIRED at
 # every entry (r9 advisory, low): a pre-versioned store (flat
@@ -218,48 +218,17 @@ def _meta(dim_dir: str) -> dict:
     return meta
 
 
-def _write_journal(dim_dir: str, journal: dict) -> None:
-    """The commit point: once this fsynced atomic rename lands, the
-    commit is durable (power loss included — r12 review) and WILL be
-    completed by ``_roll_forward``."""
-    from datapipe_spark.util import atomic_write_json
-
-    atomic_write_json(_p(dim_dir, _JOURNAL), journal)
+# the commit point (``operators/journal.py``): a module name so tests
+# can crash a commit before it
+_write_journal = journal.commit
 
 
 def _roll_forward(dim_dir: str, sweep: bool = False) -> bool:
-    """Complete a pending commit (idempotently — a crash anywhere in
-    here just rolls forward again on the next entry). Moves (closed
-    delta files) land before bucket swaps, and meta lands last, so a
-    re-entry always finds the remaining work still described by the
-    journal.
-
-    A journaled step whose source is gone is legal ONLY when its
-    destination already landed (the idempotent-replay state); source
-    AND destination both missing means the staged data was destroyed
-    after the commit point — the increment can never be completed OR
-    replayed (the watermark would advance past it), so raise instead
-    of silently dropping it (r9 advisory, medium #2: the old code
-    skipped and advanced, losing the batch).
-
-    ``sweep=True`` (WRITER entries only — single writer per store by
-    contract) additionally deletes journal-less ``.staging-*`` dirs:
-    debris from a crash BEFORE the commit point, whose batch never
-    committed (watermark unmoved ⟹ it replays wholesale). Readers
-    must NOT sweep — a reader running concurrently with an in-flight
-    pre-journal upsert would delete the live writer's staging and
-    manufacture exactly the lost-increment state above (r9 advisory,
-    medium #2). Replay runs under the store's recovery lock (r12
-    review — readers roll forward too; two concurrent replays of one
-    journal could interleave a swap's rename pair destructively).
+    """Complete a pending commit (``journal.roll_forward``), then gate
+    the layout, then — ``sweep=True``, writer entries only — remove
+    staging debris (the reader/writer rule in ``operators/journal.py``).
     Returns True if a pending commit was completed."""
-    jp = _p(dim_dir, _JOURNAL)
-    pending = False
-    if os.path.exists(jp):
-        from datapipe_spark.operators.lease import recovery_guard
-
-        with recovery_guard(dim_dir):
-            pending = _replay_journal(dim_dir)
+    pending = journal.roll_forward(dim_dir)
     # layout gate AFTER journal replay, not before: the only journal a
     # legacy-meta store can carry is `scd2_migrate`'s own commit (legacy
     # stores predate the journal entirely), and its j["meta"] carries
@@ -269,60 +238,7 @@ def _roll_forward(dim_dir: str, sweep: bool = False) -> bool:
     if os.path.exists(_p(dim_dir, "meta.json")):
         _meta(dim_dir)
     if sweep:
-        for name in os.listdir(dim_dir):
-            if name.startswith(".staging-"):
-                shutil.rmtree(os.path.join(dim_dir, name), ignore_errors=True)
-    return pending
-
-
-def _replay_journal(dim_dir: str) -> bool:
-    """The replay body of ``_roll_forward``, called ONLY under the
-    recovery lock; re-checks journal existence (the winner of the lock
-    race replays, losers find it retired)."""
-    jp = _p(dim_dir, _JOURNAL)
-    pending = os.path.exists(jp)
-    if pending:
-        with open(jp) as f:
-            j = json.load(f)
-        for src, dst in j["moves"]:
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-            elif not os.path.exists(dst):
-                raise RuntimeError(
-                    f"SCD2 commit journal at {jp} names a move whose "
-                    f"source and destination are both missing "
-                    f"({src} -> {dst}): the staged increment was "
-                    "destroyed after the commit point and cannot be "
-                    "completed or replayed. Refusing to advance the "
-                    "watermark past a lost batch."
-                )
-        for src, live in j["swaps"]:
-            old = live + ".old"
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(live), exist_ok=True)
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(live):
-                    os.rename(live, old)
-                os.rename(src, live)
-            elif not os.path.exists(live):
-                raise RuntimeError(
-                    f"SCD2 commit journal at {jp} names a swap whose "
-                    f"staged source and live target are both missing "
-                    f"({src} -> {live}): the staged rewrite was "
-                    "destroyed after the commit point. Refusing to "
-                    "complete a torn commit."
-                )
-            shutil.rmtree(old, ignore_errors=True)
-        # deletes land AFTER moves: a purge journals (new kept-row files
-        # in via moves, old touched files out via deletes) — once the
-        # moves are down, removing an already-removed file is just the
-        # replayed state, so deletion is idempotent by construction
-        for path in j.get("deletes", []):
-            if os.path.exists(path):
-                os.remove(path)
-        _write_meta(dim_dir, j["meta"])
-        os.remove(jp)
+        journal.sweep(dim_dir)
     return pending
 
 
@@ -543,8 +459,7 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
     # the current-slice write reuses the cached rows — one fewer full
     # pass per increment (r13, guide §1.2/§5)
     chained = chained.persist()
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    token, stage = journal.new_stage(dim_dir)
     n_buckets = int(meta["n_buckets"])
 
     # stage the closed delta (flat files carrying the closing batch as
@@ -582,13 +497,8 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
     # two-phase commit point is unchanged; a failure in either write
     # surfaces here, before the journal, exactly as the sequential
     # form did (staging debris is swept by the next entry's recovery).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as wpool:
-        futs = [wpool.submit(_stage_closed), wpool.submit(_stage_current)]
-        for f in futs:
-            f.result()
-    moves = _staged_moves(
+    run_concurrently(spark, _stage_closed, _stage_current)
+    moves = journal.staged_moves(
         os.path.join(stage, "closed"), _p(dim_dir, "closed"), token
     )
     swaps = _bucket_swaps(spark, stage, dim_dir, tb, _store_ddl(extras))
@@ -598,18 +508,6 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
     chained.unpersist()
     inc.unpersist()
     return True
-
-
-def _staged_moves(sdir: str, dest_dir: str, token: str) -> list[list[str]]:
-    """Journal ``moves`` for every staged part file: token-prefixed
-    destination names stay unique in the live dir across replays of
-    the same batch. One spelling for upsert/queue-purge/purge (r12
-    review — a drifted copy would desync the journals)."""
-    return [
-        [os.path.join(sdir, name), os.path.join(dest_dir, f"{token}-{name}")]
-        for name in sorted(os.listdir(sdir))
-        if name.startswith("part-") and name.endswith(".parquet")
-    ]
 
 
 def _bucket_swaps(
@@ -835,8 +733,7 @@ def scd2_rebucket(spark: SparkSession, dim_dir: str, n_buckets: int) -> None:
     cur = _read_current(spark, dim_dir, meta).select(
         *_store_cols(_extras(meta))
     )
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}/current")
+    stage = _p(journal.new_stage(dim_dir)[1], "current")
     (
         cur.withColumn("bucket", _bucket_of(int(n_buckets)))
         .repartition(int(n_buckets), "bucket")
@@ -879,7 +776,7 @@ def scd2_compact_closed(
     so time-travel filters keep pruning whole files. Completes any
     pending commit first (the r8 compaction advisory), leaves
     ``meta.json`` untouched, and commits through the journal: the
-    clustered rewrite is staged under ``.staging-*`` and swapped in
+    clustered rewrite is staged under a staging dir and swapped in
     as a journaled ``swaps`` entry (r9 advisory, medium #1 — the
     previous bare rename pair could crash between renames and leave
     NO ``closed/`` dir at all, which ``_has_closed`` read as "no
@@ -911,8 +808,7 @@ def scd2_compact_closed(
     # silently drop a column pre-evolution files lack.
     cols = ["cbucket", "inc"]
     schema = _store_ddl(_extras(_meta(dim_dir))) + ", inc int, cbucket int"
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}/closed")
+    stage = _p(journal.new_stage(dim_dir)[1], "closed")
     cluster_parquet_into(
         spark, root, stage, cols,
         target_bytes=target_bytes or TARGET_FILE_BYTES, schema=schema,
@@ -1089,13 +985,10 @@ def scd2_migrate(
         _recover(dim_dir, sweep=True)
         return False
     # legacy stores predate the journal: nothing to roll forward, and
-    # any .staging-* debris is from a crashed prior migration attempt
-    for name in os.listdir(dim_dir):
-        if name.startswith(".staging-"):
-            shutil.rmtree(os.path.join(dim_dir, name), ignore_errors=True)
+    # any staging debris is from a crashed prior migration attempt
+    journal.sweep(dim_dir)
 
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    _token, stage = journal.new_stage(dim_dir)
     cur = spark.read.parquet(_p(dim_dir, "current"))
     if "_written_inc" not in cur.columns:
         cur = cur.withColumn("_written_inc", F.lit(0).cast("int"))
@@ -1258,12 +1151,11 @@ def scd2_queue_purge(spark: SparkSession, dim_dir: str, keys: DataFrame) -> int:
     if n == 0:
         return 0
     asof = int(meta.get("last_batch_id", -1))
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    token, stage = journal.new_stage(dim_dir)
     kb.withColumn("asof_inc", F.lit(asof).cast("int")).coalesce(1).write.mode(
         "overwrite"
     ).parquet(os.path.join(stage, "tombstones"))
-    moves = _staged_moves(
+    moves = journal.staged_moves(
         os.path.join(stage, "tombstones"), _p(dim_dir, "tombstones"), token
     )
     new_meta = {**meta, "n_tombstones": int(meta.get("n_tombstones", 0)) + n}
@@ -1383,8 +1275,7 @@ def scd2_purge_keys(
             "left_anti",
         )
 
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    token, stage = journal.new_stage(dim_dir)
 
     # current/: rewrite only the touched buckets, minus the spec
     def _w_current() -> None:
@@ -1428,7 +1319,7 @@ def scd2_purge_keys(
             .parquet(os.path.join(stage, "closed"))
         )
         return (
-            _staged_moves(
+            journal.staged_moves(
                 os.path.join(stage, "closed"), _p(dim_dir, "closed"), token
             ),
             list(touched_files),
@@ -1437,13 +1328,7 @@ def scd2_purge_keys(
     # r14 (guide §2.6): the two slice rewrites touch disjoint outputs
     # and read disjoint store slices against the checkpointed key set —
     # run them concurrently; the journal still commits only after both.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as ppool:
-        cur_f = ppool.submit(_w_current)
-        closed_f = ppool.submit(_w_closed)
-        cur_f.result()
-        moves, deletes = closed_f.result()
+    _, (moves, deletes) = run_concurrently(spark, _w_current, _w_closed)
     swaps = _bucket_swaps(
         spark, stage, dim_dir, tb, _store_ddl(_extras(meta))
     )
@@ -1647,8 +1532,7 @@ def scd2_expire_closed(spark: SparkSession, dim_dir: str, cutoff) -> dict:
         # store's LARGEST slice (r12 review — callers wanting a
         # re-cluster already have scd2_compact_closed)
         return {"expired_versions": 0}
-    token = uuid.uuid4().hex[:12]
-    stage = _p(dim_dir, f".staging-{token}")
+    _token, stage = journal.new_stage(dim_dir)
     cols = ["cbucket", "inc"]  # explicit schema: always present (healed)
     (
         kept.repartitionByRange(

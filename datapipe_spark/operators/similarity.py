@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from datapipe_spark.operators import journal
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.sources.tables import load_table
 
@@ -299,14 +300,8 @@ def build_ivf_index(
     # probe, and a crashed bare swap's cells__old would be resurrected
     # over the new cells
     base = index_dir.rstrip("/")
-    if os.path.isdir(base):
-        jp = os.path.join(base, _IVF_JOURNAL)
-        if os.path.exists(jp):
-            os.remove(jp)
-        for name in os.listdir(base):
-            if name.startswith(".staging-") or name == "tombstones":
-                shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-        shutil.rmtree(base + "/cells__old", ignore_errors=True)
+    journal.reset(base)
+    shutil.rmtree(base + "/cells__old", ignore_errors=True)
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
@@ -398,15 +393,12 @@ def compact_ivf_index(
     never touched: the frozen quantizer IS the index contract.
     Content-preserving atomic dir swap; returns (files_before,
     files_after)."""
-    import uuid
-
     from datapipe_spark.operators.maintenance import (
         TARGET_FILE_BYTES,
         compact_parquet_into,
         parquet_file_count,
         recover_swap,
     )
-    from datapipe_spark.util import atomic_write_json
 
     _ivf_roll_forward(index_dir, sweep=True)  # writer entry
     base = index_dir.rstrip("/")
@@ -422,16 +414,13 @@ def compact_ivf_index(
     # rename-pair swap left a crash window with cells/ missing that
     # only a racy reader-side recover_swap could heal; the store
     # already has journal machinery whose replay is recovery-locked)
-    stage = os.path.join(base, f".staging-{uuid.uuid4().hex[:12]}")
+    _token, stage = journal.new_stage(base)
     compact_parquet_into(
         spark, cells, os.path.join(stage, "cells"),
         target_bytes=target_bytes or TARGET_FILE_BYTES,
         partition_cols=["qcell"],
     )
-    atomic_write_json(
-        os.path.join(base, _IVF_JOURNAL),
-        {"swaps": [[os.path.join(stage, "cells"), cells]]},
-    )
+    journal.commit(base, {"swaps": [[os.path.join(stage, "cells"), cells]]})
     _ivf_roll_forward(index_dir, sweep=True)
     return before, parquet_file_count(cells)
 
@@ -1546,94 +1535,18 @@ FROM q
 # IVF index compliance erasure (r10): the right-to-be-forgotten story
 # completed across every derived store — scd2_purge_keys (dimension
 # history), purge_minhash_index (dedup band index), and this (the ANN
-# vector index). Same commit discipline as the band index: a journaled
-# swaps commit so readers see the index with the vectors or without
-# them, never a partial purge.
+# vector index). Commits go through the journal every persisted store
+# shares (``operators/journal.py``) as a swaps commit, so readers see
+# the index with the vectors or without them, never a partial purge.
+# IVF journals carry no ``meta`` (the index has no meta.json). Module
+# names so tests can crash a replay; writer entries pass sweep=True.
 
-_IVF_JOURNAL = "commit-pending.json"
+_IVF_JOURNAL = journal.JOURNAL
+_ivf_roll_forward = journal.roll_forward
 
 # broadcast gate for the purge backlog — the scd2/band-index posture:
 # a snapshot-sized erasure backlog falls back to shuffle joins
 IVF_PURGE_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _ivf_roll_forward(index_dir: str, sweep: bool = False) -> bool:
-    """Complete a pending purge commit (idempotent; runs at every
-    index entry). Same semantics as ``dedup_index._roll_forward``'s
-    swaps arm: staged-src present → swap it in; both src and live
-    missing → the staged rewrite was destroyed post-journal, raise
-    rather than silently retire a torn commit. ``sweep=True`` (writer
-    entries only) clears journal-less ``.staging-*`` debris; readers
-    must not sweep (the reader-vs-writer rule shared by every
-    journaled store in this repo). Replay runs under the store's
-    recovery lock (r12 review — readers roll forward too; two
-    concurrent replays of one journal could interleave a swap's
-    rename pair destructively)."""
-    import os
-    import shutil
-
-    base = index_dir.rstrip("/")
-    jp = os.path.join(base, _IVF_JOURNAL)
-    pending = False
-    if os.path.exists(jp):
-        from datapipe_spark.operators.lease import recovery_guard
-
-        with recovery_guard(base):
-            pending = _ivf_replay_journal(base)
-    if sweep:
-        for name in os.listdir(base):
-            if name.startswith(".staging-"):
-                shutil.rmtree(os.path.join(base, name), ignore_errors=True)
-    return pending
-
-
-def _ivf_replay_journal(base: str) -> bool:
-    """The replay body of ``_ivf_roll_forward``, called ONLY under the
-    recovery lock; re-checks journal existence (the winner of the lock
-    race replays, losers find it retired)."""
-    import json
-    import os
-    import shutil
-
-    jp = os.path.join(base, _IVF_JOURNAL)
-    pending = os.path.exists(jp)
-    if pending:
-        with open(jp) as f:
-            j = json.load(f)
-        for src, dst in j.get("moves", []):
-            if os.path.exists(src):
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.replace(src, dst)
-            elif not os.path.exists(dst):
-                raise RuntimeError(
-                    f"IVF index journal at {jp} names a move whose source "
-                    f"and destination are both missing ({src} -> {dst}): "
-                    "the staged files were destroyed after the commit "
-                    "point. Refusing to complete a torn commit."
-                )
-        for src, live in j["swaps"]:
-            old = live + ".old"
-            if os.path.exists(src):
-                shutil.rmtree(old, ignore_errors=True)
-                if os.path.exists(live):
-                    os.rename(live, old)
-                os.rename(src, live)
-            elif not os.path.exists(live):
-                raise RuntimeError(
-                    f"IVF index journal at {jp} names a swap whose staged "
-                    f"source and live target are both missing ({src} -> "
-                    f"{live}): the staged rewrite was destroyed after the "
-                    "commit point. Refusing to complete a torn commit."
-                )
-            shutil.rmtree(old, ignore_errors=True)
-        # deletes after moves/swaps (the journal posture shared with
-        # scd2/dedup_index): a purge folding the tombstone queue clears
-        # its files here — removing a missing file is the replayed state
-        for path in j.get("deletes", []):
-            if os.path.exists(path):
-                os.remove(path)
-        os.remove(jp)
-    return pending
 
 
 # broadcast gate for the tombstone fold at read: tombstone rows are a
@@ -1678,33 +1591,20 @@ def queue_purge_ivf_index(
     ``compact_ivf_index`` fold it physically and clear it. Journaled
     (moves) like every other append in this repo. Returns the number
     of ids queued."""
-    import json
-    import uuid
-
     base = index_dir.rstrip("/")
     _ivf_roll_forward(base, sweep=True)
     kb = purge_ids.select("vec_id").distinct().localCheckpoint(eager=True)
     n = kb.count()
     if n == 0:
         return 0
-    token = uuid.uuid4().hex[:12]
-    stage = os.path.join(base, f".staging-{token}")
+    token, stage = journal.new_stage(base)
     kb.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(stage, "tombstones")
     )
-    moves = []
-    sdir = os.path.join(stage, "tombstones")
-    for name in sorted(os.listdir(sdir)):
-        if name.startswith("part-") and name.endswith(".parquet"):
-            moves.append(
-                [os.path.join(sdir, name),
-                 os.path.join(base, f"tombstones/{token}-{name}")]
-            )
-    from datapipe_spark.util import atomic_write_json
-
-    atomic_write_json(
-        os.path.join(base, _IVF_JOURNAL), {"moves": moves, "swaps": []}
+    moves = journal.staged_moves(
+        os.path.join(stage, "tombstones"), os.path.join(base, "tombstones"), token
     )
+    journal.commit(base, {"moves": moves, "swaps": []})
     _ivf_roll_forward(base, sweep=True)
     return n
 
@@ -1737,10 +1637,6 @@ def purge_ivf_index(
 
     Returns ``{"purged_vecs", "touched_cells"}``.
     """
-    import json
-    import os
-    import uuid
-
     from datapipe_spark.operators.maintenance import recover_swap
 
     base = index_dir.rstrip("/")
@@ -1785,17 +1681,11 @@ def purge_ivf_index(
     n_found = int(sum(r["count"] for r in hits))
     if not touched:
         if tomb_files:  # queue held only never-seen ids: just clear it
-            from datapipe_spark.util import atomic_write_json
-
-            atomic_write_json(
-                os.path.join(base, _IVF_JOURNAL),
-                {"swaps": [], "deletes": tomb_files},
-            )
+            journal.commit(base, {"swaps": [], "deletes": tomb_files})
             _ivf_roll_forward(base, sweep=True)
         return {"purged_vecs": 0, "touched_cells": 0}
 
-    token = uuid.uuid4().hex[:12]
-    stage = os.path.join(base, f".staging-{token}")
+    _token, stage = journal.new_stage(base)
     kept = _ivf_purge_kept_plan(spark, cells, touched, probe)
     (
         kept.repartition(len(touched), "qcell")
@@ -1812,12 +1702,7 @@ def purge_ivf_index(
                 empty = spark.createDataFrame([], "vec_id long, v array<double>")
             empty.write.mode("overwrite").parquet(src)
         swaps.append([src, f"{cells}/qcell={c}"])
-    from datapipe_spark.util import atomic_write_json
-
-    atomic_write_json(
-        os.path.join(base, _IVF_JOURNAL),
-        {"swaps": swaps, "deletes": tomb_files},
-    )
+    journal.commit(base, {"swaps": swaps, "deletes": tomb_files})
     _ivf_roll_forward(base, sweep=True)
     return {"purged_vecs": n_found, "touched_cells": len(touched)}
 

@@ -597,16 +597,22 @@ def streaming_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             # replay can skip the batch) until the probe output is
             # durably in the sink, and the index dirs are only mutated
             # by the roll-forward AFTER the sink scan finished, so
-            # within-batch self-matches stay impossible.
+            # within-batch self-matches stay impossible. The write is
+            # wrapped on this thread so its job keeps the caller's job
+            # group (``util.run_concurrently``).
             from concurrent.futures import ThreadPoolExecutor
+
+            from pyspark import inheritable_thread_target
 
             with ThreadPoolExecutor(max_workers=1) as spool:
                 sink_f = spool.submit(
-                    lambda: out_df.withColumnRenamed(
-                        "corpus_doc_id", "matched_doc_id"
+                    inheritable_thread_target(spark)(
+                        lambda: out_df.withColumnRenamed(
+                            "corpus_doc_id", "matched_doc_id"
+                        )
+                        .write.mode("overwrite")
+                        .parquet(os.path.join(sink, f"b_{bid:05d}"))
                     )
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(sink, f"b_{bid:05d}"))
                 )
                 append_minhash_index(
                     spark,

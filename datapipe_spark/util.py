@@ -49,6 +49,31 @@ def atomic_write_json(path: str, obj) -> None:
         os.close(dfd)
 
 
+def run_concurrently(spark, *fns) -> list:
+    """Run independent Spark actions (the staged writes of one commit)
+    concurrently so each one's driver planning and commit overhead
+    overlaps the others. Every callable is joined before the first
+    failure is raised, so no write is still running when the caller
+    decides what to commit; returns the results in argument order.
+
+    Each callable is wrapped with ``inheritable_thread_target(spark)``
+    on the calling thread, so its jobs carry the caller's job group and
+    description (a plain pool thread starts with none). Wrapping per
+    callable gives each thread its own copy of the local properties.
+
+    Hazard: the store writer lease re-enters per THREAD
+    (``operators/lease.py``), so a callable that enters a
+    ``@guards_writer`` function on the store its caller holds raises
+    ``StoreLockedError``. Pooled callables must only write staging."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    with ThreadPoolExecutor(max_workers=len(fns)) as pool:
+        futs = [pool.submit(inheritable_thread_target(spark)(fn)) for fn in fns]
+    return [f.result() for f in futs]
+
+
 def ensure_workers_can_import(spark) -> None:
     """Make ``datapipe_spark`` importable inside executor Python
     workers regardless of the driver process's cwd/PYTHONPATH.

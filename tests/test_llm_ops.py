@@ -3124,3 +3124,145 @@ def test_purge_ivf_after_compaction_composes(spark, sf_dir, tmp_path):
         sorted(map(tuple, sim.topk_ivf_index(spark, sf_dir, idx, nprobe=3).collect()))
         == got
     )
+
+
+def _arrow_rows(path):
+    """Row multiset of a parquet dir (hive partitions included), read
+    without Spark."""
+    import pyarrow.parquet as pq
+
+    return sorted(map(repr, pq.read_table(path).to_pylist()))
+
+
+def _band_index_append_case(spark, tmp_path):
+    """A built band index, and an append of one new document plus one
+    verbatim copy of a corpus document (a membership-only row)."""
+    from datapipe_spark.operators import dedup_index as di
+
+    text = (
+        "corpus document number {} holding plenty of distinct shingle "
+        "words alpha beta gamma {} delta"
+    )
+    corpus = spark.createDataFrame(
+        [(i, text.format(i, i * 7)) for i in range(4)], "doc_id long, text string"
+    )
+    batch = spark.createDataFrame(
+        [
+            (50, "an entirely fresh appended document with novel words "
+                 "epsilon zeta eta theta iota kappa lambda"),
+            (51, text.format(1, 7)),
+        ],
+        "doc_id long, text string",
+    )
+    template = str(tmp_path / "tmpl")
+    di.build_minhash_index(spark, corpus, template)
+
+    def op(d):
+        di.append_minhash_index(spark, d, batch, batch_id=0)
+
+    def state(d):
+        parts = {p: _arrow_rows(f"{d}/{p}") for p in ("mem", "sigs", "bands")}
+        return parts, di._meta(spark, d)
+
+    return template, op, state
+
+
+def _ivf_purge_case(spark, tmp_path):
+    """A built IVF index with one queued tombstone, and a purge of two
+    more ids: the commit swaps the touched cells and deletes the
+    folded tombstone files."""
+    import os as _os
+
+    from datapipe_spark.operators import similarity as sim
+
+    sf = str(tmp_path / "sf")
+    spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.expr(
+            "transform(sequence(1, 8), "
+            "i -> cast(pmod(hash(id, i), 100) as double) / 100)"
+        ).alias("embedding"),
+    ).write.parquet(_os.path.join(sf, "embeddings.parquet"))
+    template = str(tmp_path / "tmpl")
+    sim.build_ivf_index(spark, sf, template, nlist=5)
+    sim.queue_purge_ivf_index(
+        spark, template, spark.createDataFrame([(3,)], "vec_id long")
+    )
+    purge = spark.createDataFrame([(7,), (11,)], "vec_id long")
+
+    def op(d):
+        sim.purge_ivf_index(spark, d, purge)
+
+    def state(d):
+        return _arrow_rows(f"{d}/cells"), sim._ivf_has_tombstones(d)
+
+    return template, op, state
+
+
+@pytest.mark.parametrize(
+    "case",
+    [_band_index_append_case, _ivf_purge_case],
+    ids=["band_index_append", "ivf_purge"],
+)
+def test_store_crash_sweep_every_fs_step(spark, tmp_path, crash_gate, case):
+    """Crash a journaled store commit after every filesystem step in the
+    store dir in turn. Re-entering the same operation (a replayed batch
+    or request) must converge to the crash-free twin, leaving no
+    journal and no staging dir behind."""
+    import os as _os
+    import shutil as _shutil
+
+    from datapipe_spark.operators import journal
+
+    template, op, state = case(spark, tmp_path)
+    twin = str(tmp_path / "twin")
+    _shutil.copytree(template, twin)
+    op(twin)
+    want = state(twin)
+
+    completed_without_crash = False
+    for k in range(80):
+        d = str(tmp_path / f"sweep_{k:02d}")
+        _shutil.copytree(template, d)
+        crash_gate.arm(d, k)
+        crashed = False
+        try:
+            op(d)
+        except RuntimeError as e:
+            assert "crash-inject" in str(e)
+            crashed = True
+        crash_gate.disarm()
+        op(d)  # the replayed batch or request: the next writer entry
+        assert state(d) == want, f"diverged after crash at fs-op {k}"
+        assert not _os.path.exists(_os.path.join(d, journal.JOURNAL))
+        assert not [n for n in _os.listdir(d) if n.startswith(".staging-")]
+        if not crashed:
+            completed_without_crash = True
+            break
+    assert completed_without_crash, "sweep never reached the clean-run budget"
+
+
+def test_compact_minhash_index_pooled_jobs_keep_job_group(spark, tmp_path):
+    """The compaction's staged rewrites run on a thread pool; every job
+    they submit must carry the caller's job group, so no job of the
+    call lands outside it."""
+    import uuid
+
+    template, _op, _state = _band_index_append_case(spark, tmp_path)
+    from datapipe_spark.operators import dedup_index as di
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        di.compact_minhash_index(spark, template)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    # mem/ and sigs/ compactions and the bands/ cluster each submit jobs
+    assert len(tracker.getJobIdsForGroup(group)) >= 3
