@@ -3,7 +3,7 @@
 
 STRESS_OPS ?= dedup_exact,dedup_minhash_lsh,dedup_simhash,dedup_pipeline,dedup_cross_corpus,dedup_cross_corpus_minhash,dedup_cross_corpus_indexed,corpus_train_shards
 
-.PHONY: test bench perfbench perfbench-trace perfbench-ab sweep stress stress-100 stress-r8 stress-r9 stress-r10
+.PHONY: test bench perfbench perfbench-trace perfbench-ab sweep stress stress-100
 
 test:
 	python -m pytest tests/ -x -q
@@ -43,19 +43,3 @@ stress:
 # output ops stay at 30× where their true pair lists remain bounded
 stress-100:
 	SMOKE_OPS=dedup_exact,dedup_minhash_lsh,dedup_pipeline,dedup_cross_corpus_indexed,corpus_train_shards python scripts/scale_smoke.py 100
-
-# round-8 additions: PIT hot-key versions decade + stream-stream
-# interval-join state vs window width (SCALING.md round-8 table)
-stress-r8:
-	python scripts/stress_r8.py
-
-# round-9 additions: bucketed SCD2 upsert decade, 100-increment
-# maintenance + closed compaction, incremental BPE trainer curve
-# (SCALING.md round-9 table)
-stress-r9:
-	python scripts/stress_r9.py
-
-# round-10 additions: SCD2 purge/migration/expiry decade + band-index
-# and IVF-index erasure walls (SCALING.md round-10 tables)
-stress-r10:
-	python scripts/stress_r10.py

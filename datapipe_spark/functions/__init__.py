@@ -1,4 +1,5 @@
-"""Scalar function library (SURVEY §2.7 F1–F19).
+"""Scalar function library (SURVEY §2.7 F1–F19). Not every F-row has a
+helper here; COVERAGE.md §2.7 maps each one to the code that serves it.
 
 Everything is built on ``pyspark.sql.functions`` so expressions stay
 inside whole-stage codegen — no Python UDFs in the hot path. Each
@@ -24,12 +25,6 @@ def money(c: str | Column) -> Column:
     return c.cast(MONEY)
 
 
-def email_valid(c: str | Column) -> Column:
-    """F2: is_valid_email regex (batch design.md:409)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return c.rlike(r"^[^@]+@[^@]+\.[^@]+$")
-
-
 def op_label(c: str | Column) -> Column:
     """F3: CDC __op code → label, fallback to raw code
     (s3_parquet_query.py:191-198)."""
@@ -40,20 +35,6 @@ def op_label(c: str | Column) -> Column:
         .when(c == "d", "DELETE")
         .when(c == "r", "READ")
         .otherwise(c)
-    )
-
-
-def price_tier(price: Column) -> Column:
-    """F4: CASE bucketing budget/mid/premium (batch design.md:433)."""
-    return (
-        F.when(price < 500, "budget").when(price < 1200, "mid_range").otherwise("premium")
-    )
-
-
-def order_size_category(amount: Column) -> Column:
-    """F4: small/medium/large order buckets (batch design.md:455)."""
-    return (
-        F.when(amount < 50, "small").when(amount < 200, "medium").otherwise("large")
     )
 
 
@@ -71,23 +52,10 @@ def epoch_us(c: str | Column) -> Column:
     return F.unix_micros(c.cast("timestamp_ltz"))
 
 
-def epoch_ms_to_ts(c: str | Column) -> Column:
-    """F8: epoch-millis → timestamp (TimestampConverter SMT,
-    orders-s3-sink-connector.json:31-47)."""
-    c = F.col(c) if isinstance(c, str) else c
-    return F.timestamp_millis(c.cast("long"))
-
-
 def json_amount(props: str | Column, field: str = "amount") -> Column:
     """F11: JSONExtractFloat(properties, field) (realtime design.md:285)."""
     props = F.col(props) if isinstance(props, str) else props
     return F.get_json_object(props, f"$.{field}").cast("double")
-
-
-def row_json(*cols: str) -> Column:
-    """F12: to_json(struct(*)) row serialization for DLQ/retry sinks
-    (realtime design.md:506,533)."""
-    return F.to_json(F.struct(*cols) if cols else F.struct("*"))
 
 
 def ratio(num: Column, den: Column) -> Column:

@@ -55,39 +55,21 @@ def _stream_width(spark: SparkSession) -> int:
     return min(spark.sparkContext.defaultParallelism, 8)
 
 
-# State store provider for every stateful query (r12 verdict ask #1).
-# The default HDFS-backed provider keeps ALL state on the executor
-# heap — fine for bounded test state, fatal at 100 TB-scale state
-# (the reference targets sustained 10k ev/s sessionization, realtime
-# design.md:126-141, where session state outgrows any heap). Spark
-# bundles RocksDBStateStoreProvider (rocksdbjni ships in the distro,
-# no extra jar): state lives off-heap/on-disk per executor with
-# snapshot+changelog checkpointing to the checkpoint dir, so state
-# size is bounded by local disk, not heap. Measured on this box
-# (scripts/stress_r13.py, 2M distinct keys): RocksDB holds the full
-# suite green with a flat driver-heap profile where the heap provider
-# grows linearly in key count — see SCALING.md round 13.
-# Checkpoint compatibility: Spark pins the provider class into each
+# State store provider for every stateful query. The default
+# HDFS-backed provider keeps all state on the executor heap, which
+# grows linearly with the key count; the bundled RocksDB provider
+# (rocksdbjni ships with Spark, no extra jar) keeps state off-heap and
+# on local disk with snapshot+changelog checkpointing, so state is
+# bounded by executor disk. On a 2M-distinct-key dedup the heap
+# provider grew the post-GC heap by 415 MB and RocksDB by 9 MB
+# (SCALING.md round 13). Spark pins the provider class into each
 # checkpoint's offset-log conf at first start, so an existing
-# checkpoint keeps its original provider and a provider flip only
-# applies to FRESH checkpoints — every registry streaming entry
-# builds its checkpoint fresh per run (fresh_dir), so the flip is
-# safe here; a production migration would replay from source or use
-# the state rebalancing tooling. Env override: SPARK_GRAFT_STATE_STORE
-# ∈ {rocksdb (default), hdfs}.
-_STATE_STORE_PROVIDERS = {
-    "rocksdb": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    ),
-    "hdfs": (
-        "org.apache.spark.sql.execution.streaming.state."
-        "HDFSBackedStateStoreProvider"
-    ),
-}
-STATE_STORE = os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb").lower()
-
+# checkpoint keeps its provider; every registry streaming entry builds
+# its checkpoint fresh per run.
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 # Changelog checkpointing for the RocksDB provider (guide §1/§2:
 # measured r13 optimization). Without it every micro-batch COMMIT
@@ -100,12 +82,10 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 # and full snapshots move to background maintenance, which is also the
 # only posture that scales to 100 TB state (snapshot cost off the
 # latency path). Spark pins the setting into each checkpoint at first
-# start; all registry checkpoints are fresh per run, so the flip is
-# safe here. Env override: SPARK_GRAFT_ROCKSDB_CHANGELOG ∈ {1, 0}.
+# start; all registry checkpoints are fresh per run.
 _CHANGELOG_CONF = (
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
 )
-ROCKSDB_CHANGELOG = os.environ.get("SPARK_GRAFT_ROCKSDB_CHANGELOG", "1") != "0"
 
 
 @contextmanager
@@ -118,9 +98,8 @@ def _stream_shuffle(spark: SparkSession):
     prev_provider = spark.conf.get(_PROVIDER_CONF, None)
     prev_chlog = spark.conf.get(_CHANGELOG_CONF, None)
     spark.conf.set("spark.sql.shuffle.partitions", str(_stream_width(spark)))
-    spark.conf.set(_PROVIDER_CONF, _STATE_STORE_PROVIDERS[STATE_STORE])
-    if STATE_STORE == "rocksdb" and ROCKSDB_CHANGELOG:
-        spark.conf.set(_CHANGELOG_CONF, "true")
+    spark.conf.set(_PROVIDER_CONF, ROCKSDB_PROVIDER)
+    spark.conf.set(_CHANGELOG_CONF, "true")
     try:
         yield
     finally:

@@ -15,6 +15,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import pathlib
 import re
 
 from datapipe_spark.plans import registry
@@ -160,3 +161,29 @@ def test_rows_only_entries_are_the_documented_ones():
     oracled = set(registry.oracle_sql())
     rows_only = {n for n in names if n not in oracled}
     assert rows_only == ROWS_ONLY_BY_DESIGN
+
+
+# The environment the package reads: session sizing and UI, the default
+# testdata root, and one root directory per on-disk store or scratch
+# area. Which engine a query runs on is code, not a switch.
+DEPLOYMENT_SETTINGS = {
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_SHUFFLE",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_UI",
+    "SPARK_GRAFT_SF_DIR",
+    *(
+        f"SPARK_GRAFT_{root}_DIR"
+        for root in ("STREAM", "SCD2", "INDEX", "SNAPSHOT", "QUANTIZER", "IVF", "MODEL")
+    ),
+}
+
+
+def test_package_reads_only_deployment_settings():
+    pkg = pathlib.Path(registry.__file__).resolve().parents[1]
+    read = {
+        name
+        for p in sorted(pkg.rglob("*.py"))
+        for name in re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", p.read_text())
+    }
+    assert read == DEPLOYMENT_SETTINGS

@@ -36,7 +36,7 @@ def test_stateful_queries_run_on_rocksdb_state_store(spark, sf_dir):
 
     from datapipe_spark.util import scratch_root
 
-    assert jobs.STATE_STORE == "rocksdb"  # default, not an env accident
+    assert jobs.ROCKSDB_PROVIDER.endswith(".RocksDBStateStoreProvider")
     jobs.streaming_dedup_events(spark, sf_dir)  # dropDuplicates state
     ckpt = os.path.join(scratch_root(), "dedup", "cp")
     offsets = sorted(glob.glob(os.path.join(ckpt, "offsets", "*")))
@@ -46,7 +46,7 @@ def test_stateful_queries_run_on_rocksdb_state_store(spark, sf_dir):
     meta = next(json.loads(ln) for ln in lines if '"conf"' in ln)
     assert (
         meta["conf"]["spark.sql.streaming.stateStore.providerClass"]
-        == jobs._STATE_STORE_PROVIDERS["rocksdb"]
+        == jobs.ROCKSDB_PROVIDER
     )
     state_files = glob.glob(
         os.path.join(ckpt, "state", "**", "*"), recursive=True
@@ -65,7 +65,8 @@ def test_stateful_queries_run_on_rocksdb_state_store(spark, sf_dir):
 def test_stream_width_follows_session_cores(spark, sf_dir):
     """The stateful shuffle width is the session's core count, capped at
     8: it is set while the query runs (one state store per partition in
-    the checkpoint) and the session's own width comes back after."""
+    the checkpoint) and the session's own width comes back after, as
+    do its unset state store provider and changelog confs."""
     from types import SimpleNamespace
 
     from datapipe_spark.util import scratch_root
@@ -75,14 +76,23 @@ def test_stream_width_follows_session_cores(spark, sf_dir):
     width = min(spark.sparkContext.defaultParallelism, 8)
     assert jobs._stream_width(spark) == width
 
+    def state_confs():
+        return [
+            spark.conf.get(c, None)
+            for c in (jobs._PROVIDER_CONF, jobs._CHANGELOG_CONF)
+        ]
+
+    assert state_confs() == [None, None]
     before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "13")  # no width is 13
     try:
         with jobs._stream_shuffle(spark):
             assert spark.conf.get("spark.sql.shuffle.partitions") == str(width)
+            assert state_confs() == [jobs.ROCKSDB_PROVIDER, "true"]
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
         jobs.streaming_dedup_events(spark, sf_dir)
         assert spark.conf.get("spark.sql.shuffle.partitions") == "13"
+        assert state_confs() == [None, None]
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
     state = os.path.join(scratch_root(), "dedup", "cp", "state", "0")
