@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipe_spark.operators import journal
+from datapipe_spark.operators import journal, tombstones
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.operators.dedup import (
     JACCARD_THRESHOLD,
@@ -60,6 +60,22 @@ _INDEX_FORMAT_VERSION = 3  # v3: meta.json sidecar replaced the meta/ parquet
 
 def _p(index_dir: str, part: str) -> str:
     return index_dir.rstrip("/") + "/" + part
+
+
+def _part_ddl(part: str, hash: str) -> str:
+    """The declared schema of each part ``_write_parts`` writes: reads
+    pass it instead of inferring it (a Spark job per read). Shingles
+    and band keys are strings in md5 mode, int64 in xxhash64 mode."""
+    key = "string" if hash == "md5" else "bigint"
+    return {
+        "mem": "doc_id bigint, ghash string, rep_id bigint",
+        "sigs": f"doc_id bigint, sh array<{key}>, signature array<bigint>",
+        "bands": f"doc_id bigint, band_id int, band_key {key}",
+    }[part]
+
+
+def _read_part(spark: SparkSession, index_dir: str, part: str, hash: str) -> DataFrame:
+    return spark.read.schema(_part_ddl(part, hash)).parquet(_p(index_dir, part))
 
 
 def _write_parts(
@@ -215,28 +231,6 @@ def _meta(spark: SparkSession, index_dir: str) -> dict:
         return json.load(f)
 
 
-def last_applied_batch(spark: SparkSession, index_dir: str) -> int:
-    """Exactly-once high-watermark: the largest ``batch_id`` whose
-    append has COMMITTED to this index (−1 if none recorded). A pending
-    commit journal counts as committed (r12 review): past the journal's
-    atomic rename the append WILL complete via roll-forward, and
-    ``meta.json`` still holds the pre-append watermark — reading only
-    meta here let a crash-after-journal replay re-run its probe against
-    an index that already contained the batch (self-match pairs in the
-    sink). The journal's meta snapshot is the post-commit truth."""
-    import json
-
-    jp = _p(index_dir, _JOURNAL)
-    if os.path.exists(jp):
-        try:
-            with open(jp) as f:
-                jm = json.load(f).get("meta", {})
-            return int(jm.get("last_batch_id", -1))
-        except (json.JSONDecodeError, FileNotFoundError):
-            pass  # journal retired (or torn tmp debris) mid-read: fall through
-    return int(_meta(spark, index_dir).get("last_batch_id", -1))
-
-
 @guards_writer
 def append_minhash_index(
     spark: SparkSession,
@@ -292,9 +286,9 @@ def append_minhash_index(
     Returns True if the append was applied, False if skipped.
     """
     _roll_forward(index_dir, sweep=True)
-    meta = _meta(spark, index_dir)
-    if batch_id is not None and int(meta.get("last_batch_id", -1)) >= batch_id:
+    if batch_id is not None and journal.watermark(index_dir) >= batch_id:
         return False
+    meta = _meta(spark, index_dir)
     h = meta["hash"]
     if precollapsed is None:
         bm = _collapse_exact(new_docs.select("doc_id", "text")).localCheckpoint(
@@ -306,7 +300,7 @@ def append_minhash_index(
     # scan so the index side is a map-only probe (never shuffled on
     # ghash — per-batch cost tracks the batch, not the corpus)
     existing = (
-        spark.read.parquet(_p(index_dir, "mem"))
+        _read_part(spark, index_dir, "mem", h)
         .join(F.broadcast(bm.select("ghash").distinct()), "ghash")
         .groupBy("ghash")
         .agg(F.min("rep_id").alias("_old_rep"))
@@ -347,10 +341,8 @@ def append_minhash_index(
     sigs = rep_sigs.localCheckpoint(eager=True)
     # meta deltas are counted on the checkpointed frames — no table
     # rescan — BEFORE the commit point, so the journaled meta snapshot
-    # is final. Spread over the EXISTING meta (r12 review): rebuilding
-    # the dict from scratch dropped n_tombstones, silently losing the
-    # queued erasure backlog after any append (readers gate the
-    # tombstone anti-join on that counter).
+    # is final. Spread over the EXISTING meta, so keys this append does
+    # not own survive it.
     # r14 (guide §2.6): the two count jobs and the three staged part
     # writes are all independent actions over the two checkpoints —
     # run the counts on a helper pool so they overlap the staging
@@ -447,7 +439,7 @@ def compact_minhash_index(
     # Re-enters this writer's own lease.
     tb = target_bytes or TARGET_FILE_BYTES
     folded = False
-    if int(_meta(spark, index_dir).get("n_tombstones", 0)) > 0:
+    if tombstones.pending(index_dir):
         purge_minhash_index(spark, index_dir, None)
         folded = True
     # the fold already wrote bands/ range-clustered on band_key at the
@@ -590,7 +582,7 @@ def _probe_plan(
     # batch side broadcast into EVERY index join: the index tables are
     # the big side by definition and must only ever be map-side probed —
     # no shuffle of bands/sigs/mem, per-probe cost ∝ batch + matches
-    ibands = spark.read.parquet(_p(index_dir, "bands"))
+    ibands = _read_part(spark, index_dir, "bands", h)
     cand = (
         F.broadcast(bbands)
         .join(
@@ -605,7 +597,7 @@ def _probe_plan(
         .dropDuplicates(["batch_rep", "corpus_rep"])
     )
 
-    isigs = spark.read.parquet(_p(index_dir, "sigs")).select(
+    isigs = _read_part(spark, index_dir, "sigs", h).select(
         F.col("doc_id").alias("corpus_rep"), F.col("sh").alias("sh_c")
     )
     verified = (
@@ -626,7 +618,7 @@ def _probe_plan(
         "batch_rep", "corpus_rep", jac.alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
 
-    imem = spark.read.parquet(_p(index_dir, "mem")).select(
+    imem = _read_part(spark, index_dir, "mem", h).select(
         F.col("rep_id").alias("corpus_rep"), F.col("doc_id").alias("corpus_doc_id")
     )
     bmembers = bmem.select(
@@ -637,7 +629,12 @@ def _probe_plan(
         .transform(lambda d: F.broadcast(d).join(imem, "corpus_rep"))
         .select("new_doc_id", "corpus_doc_id", "jaccard")
     )
-    out = _minus_tombstones(spark, index_dir, meta, out)
+    # merge-on-read erasure: pairs whose corpus member is queued are
+    # hidden, output-identical to probing a physically purged index (a
+    # fully-erased group's pairs all filter out; a rep-promoted group's
+    # surviving members were already reached through mem/). Doc ids are
+    # never reused, so the id alone is the obligation.
+    out = tombstones.fold(spark, index_dir, out, ("corpus_doc_id", "doc_id"))
     return out, bmem, bsigs
 
 
@@ -682,69 +679,18 @@ def _cached_corpus_index(
     )
 
 
-# broadcast gate for the purge's id set — the scd2 purge posture
-# (operators/scd2.py SCD2_BROADCAST_MAX_ROWS): an erasure backlog past
-# this row count falls back to shuffle joins instead of OOMing the
-# driver with a forced broadcast
-PURGE_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _has_tombstones(index_dir: str) -> bool:
-    root = _p(index_dir, "tombstones")
-    return os.path.isdir(root) and any(
-        n.endswith(".parquet") for n in os.listdir(root)
-    )
-
-
-def _minus_tombstones(
-    spark: SparkSession, index_dir: str, meta: dict, out: DataFrame
-) -> DataFrame:
-    """Merge-on-read erasure on the probe output (r10 verdict ask #2):
-    pairs whose corpus member is queued for erasure are hidden by a
-    count-gated broadcast anti-join — output-identical to probing a
-    physically purged index (a fully-erased group's pairs all filter
-    out; a rep-promoted group's surviving members were already reached
-    through mem/, which the physical purge preserves). Doc ids are
-    never reused (new arrivals carry fresh ids by the probe contract),
-    so no sequence scoping is needed — the id alone is the
-    obligation."""
-    n = int(meta.get("n_tombstones", 0))
-    if n == 0 or not _has_tombstones(index_dir):
-        return out
-    tomb = spark.read.parquet(_p(index_dir, "tombstones")).select(
-        F.col("doc_id").alias("corpus_doc_id")
-    )
-    t = F.broadcast(tomb) if n <= PURGE_BROADCAST_MAX_ROWS else tomb
-    return out.join(t, "corpus_doc_id", "left_anti")
-
-
 @guards_writer
 def queue_purge_minhash_index(
     spark: SparkSession, index_dir: str, purge_ids: DataFrame
 ) -> int:
-    """Merge-on-read erasure queue for the band index (r10 verdict ask
-    #2 — the ``scd2_queue_purge`` posture): append the doc_ids to a
-    ``tombstones/`` set without rewriting mem/sigs/bands. Probes fold
-    the queue at read (``_minus_tombstones``);
+    """Merge-on-read erasure queue for the band index: queue the
+    doc_ids (``operators/tombstones.py``) without rewriting
+    mem/sigs/bands. Probes fold the queue at read;
     ``purge_minhash_index`` / ``compact_minhash_index`` fold it
     physically and clear it — N small requests cost N tiny appends
-    plus one batched rewrite. Journaled like every append. Returns the
-    number of ids queued."""
+    plus one batched rewrite. Returns the number of ids queued."""
     _roll_forward(index_dir, sweep=True)
-    meta = _meta(spark, index_dir)
-    kb = purge_ids.select("doc_id").distinct().localCheckpoint(eager=True)
-    n = kb.count()
-    if n == 0:
-        return 0
-    token, stage = journal.new_stage(index_dir)
-    kb.coalesce(1).write.mode("overwrite").parquet(_p(stage, "tombstones"))
-    moves = journal.staged_moves(
-        _p(stage, "tombstones"), _p(index_dir, "tombstones"), token
-    )
-    new_meta = {**meta, "n_tombstones": int(meta.get("n_tombstones", 0)) + n}
-    _commit_journal(index_dir, {"moves": moves, "swaps": [], "meta": new_meta})
-    _roll_forward(index_dir, sweep=True)
-    return n
+    return tombstones.queue(index_dir, purge_ids.select("doc_id"))
 
 
 def _purge_rewrite_plans(
@@ -761,7 +707,8 @@ def _purge_rewrite_plans(
     (map-only pass, no shuffle of the index bulk); above the gate the
     same plans fall back to shuffle joins."""
     tb = F.broadcast(trans) if gated else trans
-    mem = spark.read.parquet(_p(index_dir, "mem"))
+    h = _meta(spark, index_dir)["hash"]
+    mem = _read_part(spark, index_dir, "mem", h)
     # mem/: drop purged rows, re-point affected groups at the new rep
     mem_out = (
         mem.join(probe, "doc_id", "left_anti")
@@ -776,7 +723,7 @@ def _purge_rewrite_plans(
     rmap = tb.select("old_rep", "new_rep")
 
     def _rekey(part: str, cols: list[str]) -> DataFrame:
-        t = spark.read.parquet(_p(index_dir, part)).join(
+        t = _read_part(spark, index_dir, part, h).join(
             rmap, F.col("doc_id") == F.col("old_rep"), "left"
         )
         return t.filter(
@@ -815,7 +762,8 @@ def purge_minhash_index(
 
     Cost shape at 100 TB: ONE map-only pass over each part — the purged
     id set and the O(affected groups) rep-translation map are broadcast
-    (count-gated at ``PURGE_BROADCAST_MAX_ROWS``, shuffle fallback), so
+    (count-gated at ``tombstones.BACKLOG_BROADCAST_MAX_ROWS``, shuffle
+    fallback), so
     the index is never shuffled on its own bulk; only the affected-
     group slice (O(purged)) takes a tiny aggregation. The full-scan
     rewrite itself is inherent to erasure in immutable files — the same
@@ -833,37 +781,23 @@ def purge_minhash_index(
 
     _roll_forward(index_dir, sweep=True)
     meta = _meta(spark, index_dir)
-    # fold the merge-on-read queue (r10 verdict ask #2): queued
-    # tombstones join the explicit backlog and are cleared in this
-    # same journaled commit (``purge_ids=None`` is the maintenance-
-    # pass form — fold the queue alone)
-    parts = []
-    if purge_ids is not None:
-        parts.append(purge_ids.select("doc_id"))
-    tomb_files = (
-        [
-            _p(index_dir, f"tombstones/{n}")
-            for n in sorted(os.listdir(_p(index_dir, "tombstones")))
-            if n.endswith(".parquet")
-        ]
-        if _has_tombstones(index_dir)
-        else []
+    # fold the merge-on-read queue: queued ids join the explicit
+    # backlog and are cleared in this same journaled commit
+    # (``purge_ids=None`` is the maintenance-pass form — fold the queue
+    # alone)
+    spec, tomb_files = tombstones.backlog(
+        spark, index_dir, None if purge_ids is None else purge_ids.select("doc_id")
     )
-    if tomb_files and int(meta.get("n_tombstones", 0)) > 0:
-        parts.append(
-            spark.read.parquet(_p(index_dir, "tombstones")).select("doc_id")
-        )
-    if not parts:
+    if spec is None:
         return {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
-    spec = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     kb = spec.distinct().localCheckpoint(eager=True)
     n_purge = kb.count()
     if n_purge == 0:
         return {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
-    gated = n_purge <= PURGE_BROADCAST_MAX_ROWS
+    gated = n_purge <= tombstones.BACKLOG_BROADCAST_MAX_ROWS
     probe = F.broadcast(kb) if gated else kb
 
-    mem = spark.read.parquet(_p(index_dir, "mem"))
+    mem = _read_part(spark, index_dir, "mem", meta["hash"])
     # ONE index-scan probe join yields everything O(purged): the hit
     # rows (meta delta) and the affected groups (rep translation)
     hits = mem.join(probe, "doc_id").localCheckpoint(eager=True)
@@ -875,11 +809,7 @@ def purge_minhash_index(
         # a full mem/sigs/bands rewrite here would be a pointless
         # O(index) pass for a no-op erasure)
         if tomb_files:
-            _commit_journal(
-                index_dir,
-                {"moves": [], "swaps": [], "deletes": tomb_files,
-                 "meta": {**meta, "n_tombstones": 0}},
-            )
+            _commit_journal(index_dir, {"deletes": tomb_files})
             _roll_forward(index_dir, sweep=True)
         return {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
     affected = hits.select("ghash", F.col("rep_id").alias("old_rep")).distinct()
@@ -943,7 +873,6 @@ def purge_minhash_index(
     new_meta = dict(meta)
     new_meta["n_docs"] = int(meta["n_docs"]) - n_found
     new_meta["n_reps"] = int(meta["n_reps"]) - dropped
-    new_meta["n_tombstones"] = 0  # the queue folds into this commit
     swaps = [
         [os.path.join(stage, part), _p(index_dir, part)]
         for part in ("mem", "sigs", "bands")

@@ -174,6 +174,26 @@ def sweep(store_dir: str) -> int:
 _sweep = sweep  # roll_forward's ``sweep`` flag shadows the name
 
 
+def watermark(store_dir: str) -> int:
+    """The store's exactly-once high-watermark: the largest
+    ``last_batch_id`` whose commit has passed the commit point (−1 if
+    none recorded). A pending journal that carries ``meta`` is read
+    first: past its rename the commit WILL complete, while
+    ``meta.json`` still holds the pre-commit watermark, so a replay
+    checked against meta alone would re-run a committed batch. A
+    journal without ``meta`` (a queue commit, say) does not change
+    ``meta.json``, which then holds the watermark."""
+    try:
+        with open(_p(store_dir, JOURNAL)) as f:
+            j = json.load(f)
+        if "meta" in j:
+            return int(j["meta"].get("last_batch_id", -1))
+    except (json.JSONDecodeError, FileNotFoundError):
+        pass  # no journal, or retired (or torn tmp debris) mid-read
+    with open(_p(store_dir, "meta.json")) as f:
+        return int(json.load(f).get("last_batch_id", -1))
+
+
 def reset(store_dir: str) -> None:
     """Rebuild-in-place clear: drop a stale journal, staging debris and
     the ``tombstones/`` queue, so nothing of the OLD store can roll

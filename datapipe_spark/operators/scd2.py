@@ -77,7 +77,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datapipe_spark.operators import journal
+from datapipe_spark.operators import journal, tombstones
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.util import run_concurrently, write_empty_parquet
 
@@ -435,9 +435,9 @@ def scd2_upsert(spark: SparkSession, dim_dir: str, increment: DataFrame, batch_i
     is skipped. Returns True if applied, False if skipped (replay).
     """
     _recover(dim_dir, sweep=True)
-    meta = _meta(dim_dir)
-    if batch_id <= int(meta.get("last_batch_id", -1)):
+    if batch_id <= journal.watermark(dim_dir):
         return False
+    meta = _meta(dim_dir)
     chained, cur_untouched, tb, extras, inc = _merge_plan(
         spark, dim_dir, increment, batch_id
     )
@@ -526,53 +526,30 @@ def _bucket_swaps(
     return swaps
 
 
-def _has_tombstones(dim_dir: str) -> bool:
-    root = _p(dim_dir, "tombstones")
-    return os.path.isdir(root) and any(
-        n.endswith(".parquet") for n in os.listdir(root)
-    )
-
-
-def _minus_tombstones(
-    spark: SparkSession, dim_dir: str, meta: dict, df: DataFrame
-) -> DataFrame:
-    """Merge-on-read erasure (r10 verdict ask #2): anti-join the queued
-    tombstone set — Iceberg's equality-delete-with-sequence-number
-    pattern on our store. A tombstone ``(id, asof_inc)`` hides every
+def _queue_scope():
+    """The erasure queue's sequence scope (``operators/tombstones.py``
+    ``fold`` condition): a tombstone ``(id, asof_inc)`` hides every
     version of the key written at or before the queue point
     (``_written_inc`` ≤ ``asof_inc``); versions a LATER increment
-    writes survive, exactly as they would after a physical purge
-    followed by re-insertion. The tombstone set is count-gated
-    broadcast (the probe posture — plan-gated in tests), so the read
-    pays one map-side anti-join, never a shuffle of the store.
-    ``df`` must still carry ``_written_inc``."""
-    n = int(meta.get("n_tombstones", 0))
-    if n == 0 or not _has_tombstones(dim_dir):
-        return df
-    tomb = spark.read.parquet(_p(dim_dir, "tombstones")).select("id", "asof_inc")
-    t = F.broadcast(tomb) if n <= SCD2_BROADCAST_MAX_ROWS else tomb
-    return df.alias("h").join(
-        t.alias("t"),
-        (F.col("h.id") == F.col("t.id"))
-        & (F.col("h._written_inc") <= F.col("t.asof_inc")),
-        "left_anti",
-    )
+    writes survive, exactly as after a physical purge followed by
+    re-insertion. The folded slice must still carry ``_written_inc``."""
+    return F.col("h._written_inc") <= F.col("t.asof_inc")
 
 
 def scd2_read_history(spark: SparkSession, dim_dir: str) -> DataFrame:
     """The full Type-2 dimension: closed versions ∪ open versions —
     row-identical to the batch ``cdc_scd2_history`` over the same
     changelog (hash-oracled by the registry entry). Queued tombstones
-    are folded in at read (``_minus_tombstones``)."""
+    are folded in at read (``_queue_scope``)."""
     _recover(dim_dir)
     meta = _meta(dim_dir)
     hcols = _history_cols(_extras(meta))
-    cur = _minus_tombstones(
-        spark, dim_dir, meta, _read_current(spark, dim_dir, meta)
+    cur = tombstones.fold(
+        spark, dim_dir, _read_current(spark, dim_dir, meta), "id", _queue_scope()
     )
     if _has_closed(dim_dir):
-        closed = _minus_tombstones(
-            spark, dim_dir, meta, _read_closed(spark, dim_dir, meta)
+        closed = tombstones.fold(
+            spark, dim_dir, _read_closed(spark, dim_dir, meta), "id", _queue_scope()
         )
         return closed.select(*hcols).unionByName(cur.select(*hcols))
     return cur.select(*hcols)
@@ -593,13 +570,14 @@ def scd2_lookup(spark: SparkSession, dim_dir: str, ids: list) -> DataFrame:
         r[0]
         for r in keys.select(_bucket_of(n_buckets).alias("b")).distinct().collect()
     )
-    cur = _minus_tombstones(
+    cur = tombstones.fold(
         spark,
         dim_dir,
-        meta,
         _read_current(spark, dim_dir, meta).filter(
             F.col("bucket").isin(tb) if tb else F.lit(False)
         ),
+        "id",
+        _queue_scope(),
     )
     return cur.join(F.broadcast(keys), "id").select(
         *_history_cols(_extras(meta))
@@ -645,13 +623,14 @@ def scd2_history_for_keys(
     tb = sorted({r["b"] for r in pairs})
     cb = sorted({r["cb"] for r in pairs})
     hcols = _history_cols(_extras(meta))
-    cur = _minus_tombstones(
+    cur = tombstones.fold(
         spark,
         dim_dir,
-        meta,
         _read_current(spark, dim_dir, meta).filter(
             F.col("bucket").isin(tb) if tb else F.lit(False)
         ),
+        "id",
+        _queue_scope(),
     ).select(*hcols)
     hist = cur
     if _has_closed(dim_dir):
@@ -666,7 +645,7 @@ def scd2_history_for_keys(
             if cb
             else F.lit(False)
         )
-        closed = _minus_tombstones(spark, dim_dir, meta, closed)
+        closed = tombstones.fold(spark, dim_dir, closed, "id", _queue_scope())
         hist = closed.select(*hcols).unionByName(cur)
     return hist.join(F.broadcast(kb) if gated else kb, "id", "semi")
 
@@ -692,16 +671,16 @@ def scd2_as_of(spark: SparkSession, dim_dir: str, batch_id: int) -> DataFrame:
     meta = _meta(dim_dir)
     hcols = _history_cols(_extras(meta))
     cur = (
-        _minus_tombstones(
-            spark, dim_dir, meta, _read_current(spark, dim_dir, meta)
+        tombstones.fold(
+            spark, dim_dir, _read_current(spark, dim_dir, meta), "id", _queue_scope()
         )
         .filter(F.col("_written_inc") <= batch_id)
         .select(*hcols)
     )
     if not _has_closed(dim_dir):
         return cur
-    closed = _minus_tombstones(
-        spark, dim_dir, meta, _read_closed(spark, dim_dir, meta)
+    closed = tombstones.fold(
+        spark, dim_dir, _read_closed(spark, dim_dir, meta), "id", _queue_scope()
     ).filter(F.col("_written_inc") <= batch_id)
     closed_by_now = closed.filter(F.col("inc") <= batch_id).select(*hcols)
     reopened = (
@@ -795,7 +774,7 @@ def scd2_compact_closed(
     # Iceberg folds delete files at compaction): the physical purge
     # clears the tombstones, so post-compaction reads drop the
     # anti-join entirely. Re-enters this writer's own lease.
-    if int(_meta(dim_dir).get("n_tombstones", 0)) > 0:
+    if tombstones.pending(dim_dir):
         scd2_purge_keys(spark, dim_dir, None)
     if not _has_closed(dim_dir):
         return (0, 0)
@@ -1128,68 +1107,21 @@ def _closed_files_touching(closed_root: str, cbs: list[int]) -> list[str]:
 
 @guards_writer
 def scd2_queue_purge(spark: SparkSession, dim_dir: str, keys: DataFrame) -> int:
-    """Merge-on-read erasure queue (r10 verdict ask #2 — Iceberg's
-    position/equality-delete pattern on our store): record the erasure
-    obligation WITHOUT rewriting any data file. Appends ``(id,
-    asof_inc)`` tombstones — ``asof_inc`` is the store's watermark at
-    queue time, so the tombstone hides exactly the versions that
-    existed when the request arrived (``_minus_tombstones``); a later
-    re-insert of the key opens fresh visible history, identical to
-    physical-purge-then-reinsert. Readers fold tombstones in via a
-    count-gated broadcast anti-join; ``scd2_purge_keys`` and
-    ``scd2_compact_closed`` fold them PHYSICALLY and clear the queue —
+    """Merge-on-read erasure queue (Iceberg's equality-delete pattern
+    on our store): record the erasure obligation WITHOUT rewriting any
+    data file. Queues ``(id, asof_inc)`` tombstones
+    (``operators/tombstones.py``) — ``asof_inc`` is the store's
+    watermark at queue time, so the tombstone hides exactly the
+    versions that existed when the request arrived (``_queue_scope``);
+    a later re-insert of the key opens fresh visible history,
+    identical to physical-purge-then-reinsert. ``scd2_purge_keys`` and
+    ``scd2_compact_closed`` fold the queue PHYSICALLY and clear it —
     so N small GDPR requests cost N tiny appends plus ONE batched
     rewrite at the next maintenance pass, instead of N slice rewrites.
-
-    Commit is journaled like every append (staged files + moves), and
-    ``meta.n_tombstones`` (the broadcast-gate count) advances in the
-    same journal. Returns the number of keys queued."""
+    Returns the number of keys queued."""
     _recover(dim_dir, sweep=True)
-    meta = _meta(dim_dir)
-    kb = keys.select("id").distinct().localCheckpoint(eager=True)
-    n = kb.count()
-    if n == 0:
-        return 0
-    asof = int(meta.get("last_batch_id", -1))
-    token, stage = journal.new_stage(dim_dir)
-    kb.withColumn("asof_inc", F.lit(asof).cast("int")).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(stage, "tombstones"))
-    moves = journal.staged_moves(
-        os.path.join(stage, "tombstones"), _p(dim_dir, "tombstones"), token
-    )
-    new_meta = {**meta, "n_tombstones": int(meta.get("n_tombstones", 0)) + n}
-    _write_journal(dim_dir, {"moves": moves, "swaps": [], "meta": new_meta})
-    _roll_forward(dim_dir, sweep=True)
-    return n
-
-
-def _purge_spec(
-    spark: SparkSession, dim_dir: str, meta: dict, keys: DataFrame | None
-) -> DataFrame | None:
-    """The physical purge's combined erasure spec: explicit keys (every
-    version — ``asof_inc`` = +∞) ∪ the queued tombstone set (sequence-
-    scoped), collapsed to the max ``asof_inc`` per key. None if there
-    is nothing to purge."""
-    parts = []
-    if keys is not None:
-        parts.append(
-            keys.select("id").distinct().withColumn(
-                "asof_inc", F.lit(2**31 - 1).cast("int")
-            )
-        )
-    if int(meta.get("n_tombstones", 0)) > 0 and _has_tombstones(dim_dir):
-        parts.append(
-            spark.read.parquet(_p(dim_dir, "tombstones")).select("id", "asof_inc")
-        )
-    if not parts:
-        return None
-    spec = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return (
-        spec.groupBy("id")
-        .agg(F.max("asof_inc").alias("asof_inc"))
-        .localCheckpoint(eager=True)
-    )
+    asof = F.lit(journal.watermark(dim_dir)).cast("int").alias("asof_inc")
+    return tombstones.queue(dim_dir, keys.select("id", asof))
 
 
 @guards_writer
@@ -1235,36 +1167,34 @@ def scd2_purge_keys(
     _recover(dim_dir, sweep=True)
     meta = _meta(dim_dir)
     n_buckets = int(meta["n_buckets"])
-    spec = _purge_spec(spark, dim_dir, meta, keys)
+    # explicit keys erase every version (asof_inc = +∞), queued
+    # tombstones their sequence-scoped slice: max asof_inc per key
+    spec, tomb_files = tombstones.backlog(
+        spark,
+        dim_dir,
+        None
+        if keys is None
+        else keys.select("id", F.lit(2**31 - 1).cast("int").alias("asof_inc")),
+    )
     if spec is None:
         return
-    kb = spec
+    kb = (
+        spec.groupBy("id")
+        .agg(F.max("asof_inc").alias("asof_inc"))
+        .localCheckpoint(eager=True)
+    )
     # one aggregation yields the touched-bucket set AND the broadcast
     # gate's key count (the upsert's probe posture: a snapshot-sized
     # erasure backlog must not force-broadcast every key)
     stats = kb.groupBy(_bucket_of(n_buckets).alias("b")).count().collect()
     tb = sorted(r["b"] for r in stats)
-    new_meta = {**meta, "n_tombstones": 0}
-    tomb_files = (
-        [
-            _p(dim_dir, f"tombstones/{n}")
-            for n in sorted(os.listdir(_p(dim_dir, "tombstones")))
-            if n.endswith(".parquet")
-        ]
-        if _has_tombstones(dim_dir)
-        else []
-    )
     if not tb:
         if tomb_files:  # queue held only never-seen keys: just clear it
-            _write_journal(
-                dim_dir,
-                {"moves": [], "swaps": [], "deletes": tomb_files,
-                 "meta": new_meta},
-            )
+            _write_journal(dim_dir, {"deletes": tomb_files})
             _roll_forward(dim_dir, sweep=True)
         return
     n_keys = sum(r["count"] for r in stats)
-    gated = n_keys <= SCD2_BROADCAST_MAX_ROWS
+    gated = n_keys <= tombstones.BACKLOG_BROADCAST_MAX_ROWS
 
     def _minus_spec(df: DataFrame) -> DataFrame:
         t = F.broadcast(kb) if gated else kb
@@ -1334,10 +1264,7 @@ def scd2_purge_keys(
     )
     deletes += tomb_files  # fold: the queue is cleared in this commit
 
-    _write_journal(
-        dim_dir,
-        {"moves": moves, "swaps": swaps, "deletes": deletes, "meta": new_meta},
-    )
+    _write_journal(dim_dir, {"moves": moves, "swaps": swaps, "deletes": deletes})
     _roll_forward(dim_dir, sweep=True)
 
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from datapipe_spark.operators import journal
+from datapipe_spark.operators import journal, tombstones
 from datapipe_spark.operators.lease import guards_writer
 from datapipe_spark.sources.tables import load_table
 
@@ -407,7 +407,7 @@ def compact_ivf_index(
     # fold the merge-on-read erasure queue first (the posture shared
     # by scd2_compact_closed and compact_minhash_index): post-
     # compaction probes drop the anti-join entirely
-    if _ivf_has_tombstones(base):
+    if tombstones.pending(base):
         purge_ivf_index(spark, index_dir, None)
     before = parquet_file_count(cells)
     # stage + ONE journaled swap (r12 review: the previous bare
@@ -492,7 +492,9 @@ def topk_ivf_index(
     idx = spark.read.parquet(index_dir.rstrip("/") + "/cells").filter(
         F.col("qcell").isin(sorted({int(c) for row in order for c in row}))
     )
-    idx = _ivf_minus_tombstones(spark, index_dir.rstrip("/"), idx)
+    # merge-on-read erasure: queued vec_ids leave the scan BEFORE
+    # scoring, so survivors fill the ranks exactly as after the purge
+    idx = tombstones.fold(spark, index_dir.rstrip("/"), idx, "vec_id")
     scored = (
         F.broadcast(probes)
         .join(idx, "qcell")
@@ -1544,69 +1546,18 @@ FROM q
 _IVF_JOURNAL = journal.JOURNAL
 _ivf_roll_forward = journal.roll_forward
 
-# broadcast gate for the purge backlog — the scd2/band-index posture:
-# a snapshot-sized erasure backlog falls back to shuffle joins
-IVF_PURGE_BROADCAST_MAX_ROWS = 2_000_000
-
-
-# broadcast gate for the tombstone fold at read: tombstone rows are a
-# single long column (~10 bytes/row on disk), so a BYTE gate gives the
-# reader its broadcast decision for free (no count job per probe) —
-# 32 MB ≈ the 2M-row gate the other stores use
-IVF_TOMBSTONE_BROADCAST_MAX_BYTES = 32 << 20
-
-
-def _ivf_has_tombstones(base: str) -> bool:
-    root = base + "/tombstones"
-    return os.path.isdir(root) and any(
-        n.endswith(".parquet") for n in os.listdir(root)
-    )
-
-
-def _ivf_minus_tombstones(spark: SparkSession, base: str, idx: DataFrame) -> DataFrame:
-    """Merge-on-read erasure on the probe's cells scan (r11 — the
-    ``scd2_queue_purge`` posture on the IVF index): queued vec_ids are
-    anti-joined out BEFORE scoring, so erased vectors appear in no
-    top-k and survivors fill the ranks exactly as they would after the
-    physical purge. Broadcast under a byte gate (tombstones are one
-    long column; bytes stand in for the row count with no extra job)."""
-    if not _ivf_has_tombstones(base):
-        return idx
-    from datapipe_spark.operators.maintenance import table_bytes
-
-    tomb = spark.read.parquet(base + "/tombstones").select("vec_id")
-    if table_bytes(base + "/tombstones") <= IVF_TOMBSTONE_BROADCAST_MAX_BYTES:
-        tomb = F.broadcast(tomb)
-    return idx.join(tomb, "vec_id", "left_anti")
-
-
 @guards_writer
 def queue_purge_ivf_index(
     spark: SparkSession, index_dir: str, purge_ids: DataFrame
 ) -> int:
-    """Merge-on-read erasure queue for the IVF index (r11, completing
-    the r10 ask-#2 pattern across all three persisted stores): append
-    the vec_ids to ``tombstones/`` without rewriting any ``qcell=``
+    """Merge-on-read erasure queue for the IVF index: queue the vec_ids
+    (``operators/tombstones.py``) without rewriting any ``qcell=``
     partition. Probes fold the queue at read; ``purge_ivf_index`` /
-    ``compact_ivf_index`` fold it physically and clear it. Journaled
-    (moves) like every other append in this repo. Returns the number
-    of ids queued."""
+    ``compact_ivf_index`` fold it physically and clear it. Returns the
+    number of ids queued."""
     base = index_dir.rstrip("/")
     _ivf_roll_forward(base, sweep=True)
-    kb = purge_ids.select("vec_id").distinct().localCheckpoint(eager=True)
-    n = kb.count()
-    if n == 0:
-        return 0
-    token, stage = journal.new_stage(base)
-    kb.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(stage, "tombstones")
-    )
-    moves = journal.staged_moves(
-        os.path.join(stage, "tombstones"), os.path.join(base, "tombstones"), token
-    )
-    journal.commit(base, {"moves": moves, "swaps": []})
-    _ivf_roll_forward(base, sweep=True)
-    return n
+    return tombstones.queue(base, purge_ids.select("vec_id"))
 
 
 @guards_writer
@@ -1631,9 +1582,9 @@ def purge_ivf_index(
     the index once per purge batch — at extreme scale a deployment
     would keep the ``vec_id → qcell`` mapping in its catalog (it is
     16 bytes/vector and append-only under the frozen quantizer) and
-    skip the scan entirely. The backlog id set is broadcast behind a count gate
-    (``IVF_PURGE_BROADCAST_MAX_ROWS``, shuffle fallback) so a
-    snapshot-sized backlog cannot OOM the driver.
+    skip the scan entirely. The backlog id set is broadcast behind a
+    count gate (``tombstones.BACKLOG_BROADCAST_MAX_ROWS``, shuffle
+    fallback) so a snapshot-sized backlog cannot OOM the driver.
 
     Returns ``{"purged_vecs", "touched_cells"}``.
     """
@@ -1643,31 +1594,21 @@ def purge_ivf_index(
     cells = base + "/cells"
     _ivf_roll_forward(base, sweep=True)
     recover_swap(cells)  # heal a crashed compaction swap first
-    # fold the merge-on-read queue (r11): queued tombstones join the
-    # explicit backlog and are cleared in this same journaled commit
+    # fold the merge-on-read queue: queued ids join the explicit
+    # backlog and are cleared in this same journaled commit
     # (purge_ids=None is the maintenance-pass form)
-    parts = []
-    if purge_ids is not None:
-        parts.append(purge_ids.select("vec_id"))
-    tomb_files = (
-        [
-            os.path.join(base, "tombstones", n)
-            for n in sorted(os.listdir(os.path.join(base, "tombstones")))
-            if n.endswith(".parquet")
-        ]
-        if _ivf_has_tombstones(base)
-        else []
+    spec, tomb_files = tombstones.backlog(
+        spark, base, None if purge_ids is None else purge_ids.select("vec_id")
     )
-    if tomb_files:
-        parts.append(spark.read.parquet(base + "/tombstones").select("vec_id"))
-    if not parts:
+    if spec is None:
         return {"purged_vecs": 0, "touched_cells": 0}
-    spec = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     kb = spec.distinct().localCheckpoint(eager=True)
     n_purge = kb.count()
     if n_purge == 0:
         return {"purged_vecs": 0, "touched_cells": 0}
-    probe = F.broadcast(kb) if n_purge <= IVF_PURGE_BROADCAST_MAX_ROWS else kb
+    probe = (
+        F.broadcast(kb) if n_purge <= tombstones.BACKLOG_BROADCAST_MAX_ROWS else kb
+    )
 
     cdf = spark.read.parquet(cells)
     hits = (
@@ -1681,7 +1622,7 @@ def purge_ivf_index(
     n_found = int(sum(r["count"] for r in hits))
     if not touched:
         if tomb_files:  # queue held only never-seen ids: just clear it
-            journal.commit(base, {"swaps": [], "deletes": tomb_files})
+            journal.commit(base, {"deletes": tomb_files})
             _ivf_roll_forward(base, sweep=True)
         return {"purged_vecs": 0, "touched_cells": 0}
 

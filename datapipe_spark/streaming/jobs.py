@@ -515,12 +515,12 @@ def streaming_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
+    from datapipe_spark.operators import journal
     from datapipe_spark.operators.dedup import CROSS_STREAM_BATCHES, _cross_tagged
     from datapipe_spark.operators.dedup_index import (
         _cached_corpus_index,
         _probe_plan,
         append_minhash_index,
-        last_applied_batch,
     )
 
     out = src.fresh_dir("xcorpus_dedup")
@@ -556,7 +556,7 @@ def streaming_dedup_cross_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # replayed batch ≤ that watermark already ran probe+sink+append
         # (append is last, so watermark ⟹ sink done too) — skip it
         # wholesale instead of double-appending the index.
-        if bid <= last_applied_batch(spark, index_dir):
+        if bid <= journal.watermark(index_dir):
             return
         # one collapse+sign per batch: the sink write materializes the
         # probe against the pre-append index snapshot, then the append

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from datapipe_spark.operators import tombstones
 from datapipe_spark.plans import cdc_queries as cq
 from datapipe_spark.sources import cdc
 from tests.oracle import compare_to_oracle
@@ -1218,6 +1219,13 @@ def test_scd2_schema_evolution_lifecycle(spark, tmp_path):
     assert got == [r for r in want if r[0] != 1]
 
 
+def _queued(store_dir):
+    """Rows in a store's erasure queue, from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in tombstones.pending(store_dir))
+
+
 def test_scd2_queued_purges_equal_immediate_purges(spark, tmp_path):
     """r10 verdict ask #2 property: k queued purges (with interleaved
     upserts, including a re-insert of a queued key) read back — and,
@@ -1269,7 +1277,7 @@ def test_scd2_queued_purges_equal_immediate_purges(spark, tmp_path):
 
     # merge-on-read BEFORE any fold must already match
     assert hist(qd) == hist(pd_)
-    assert scd2._meta(qd)["n_tombstones"] == 3
+    assert _queued(qd) == 3
     # every read surface folds tombstones: lookup, key-pruned, as_of
     assert scd2.scd2_lookup(spark, qd, [2, 3]).count() == 0
     assert scd2.scd2_lookup(spark, qd, [1]).filter("status='R'").count() == 1
@@ -1291,8 +1299,7 @@ def test_scd2_queued_purges_equal_immediate_purges(spark, tmp_path):
     scd2.scd2_compact_closed(spark, qd)
     scd2.scd2_compact_closed(spark, pd_)
     assert hist(qd) == hist(pd_)
-    assert scd2._meta(qd).get("n_tombstones", 0) == 0
-    assert not scd2._has_tombstones(qd)
+    assert not tombstones.pending(qd)
     # post-fold, the physical bytes hold no trace of the purged keys
     purged_in_files = (
         spark.read.parquet(scd2._p(qd, "closed"))
@@ -1327,7 +1334,7 @@ def test_scd2_queued_purges_equal_immediate_purges(spark, tmp_path):
         sorted(tuple(r) for r in scd2.scd2_read_history(spark, d3).collect())
         == want
     )
-    assert scd2._meta(d3).get("n_tombstones", 0) == 0
+    assert not tombstones.pending(d3)
 
 
 def test_scd2_tombstones_compose_with_expiry_and_rebucket(spark, tmp_path):
@@ -1375,11 +1382,11 @@ def test_scd2_tombstones_compose_with_expiry_and_rebucket(spark, tmp_path):
     scd2.scd2_rebucket(spark, d, 8)
     hist2 = scd2.scd2_read_history(spark, d)
     assert ids(hist2) == pre_rebucket_ids, "rebucket changed visible history"
-    assert scd2._meta(d)["n_tombstones"] == 1, "rebucket must not drop the queue"
+    assert _queued(d) == 1, "rebucket must not drop the queue"
 
     want = sorted(tuple(r) for r in hist2.collect())
     scd2.scd2_compact_closed(spark, d)  # folds the queue
-    assert scd2._meta(d).get("n_tombstones", 0) == 0
+    assert not tombstones.pending(d)
     assert sorted(tuple(r) for r in scd2.scd2_read_history(spark, d).collect()) == want
     # post-fold, key 3 is physically gone from both slices
     for part in ("current", "closed"):
@@ -1975,7 +1982,7 @@ def test_scd2_purge_above_broadcast_gate_still_exact(spark, tmp_path, monkeypatc
     exactly the requested keys."""
     from datapipe_spark.operators import scd2
 
-    monkeypatch.setattr(scd2, "SCD2_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(tombstones, "BACKLOG_BROADCAST_MAX_ROWS", 0)
     d = str(tmp_path / "purge_big")
     _mini_store(spark, scd2, d)
     before = {tuple(r) for r in scd2.scd2_read_history(spark, d).collect()}

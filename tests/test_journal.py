@@ -1,7 +1,8 @@
 """The shared commit journal (``operators/journal.py``) on plain files,
 without Spark: replay order and idempotence under a crash at every
-filesystem step, the lost-staging raise, the recovery log records, and
-a guard that keeps the protocol in that one module."""
+filesystem step, the lost-staging raise, the recovery log records, the
+watermark read, and a guard that keeps the protocol in that one
+module."""
 
 from __future__ import annotations
 
@@ -155,6 +156,24 @@ def test_reset_clears_journal_staging_and_tombstones(tmp_path):
     journal.reset(d)
     assert _tree(d) == {"mem/part-0.parquet": "kept"}
     journal.reset(str(tmp_path / "absent"))  # no store yet: a no-op
+
+
+def test_watermark_reads_pending_journal_meta_first(tmp_path):
+    """The exactly-once watermark is the pending journal's meta when it
+    carries one (the commit WILL complete), else ``meta.json``; a
+    journal without meta (a queue commit) leaves it to ``meta.json``."""
+    d = str(tmp_path / "store")
+    _write(f"{d}/meta.json", json.dumps({"last_batch_id": 3}))
+    assert journal.watermark(d) == 3
+    journal.commit(d, {"moves": [], "meta": {"last_batch_id": 4}})
+    assert journal.watermark(d) == 4
+    journal.roll_forward(d)
+    assert journal.watermark(d) == 4
+    journal.commit(d, {"moves": []})
+    assert journal.watermark(d) == 4
+    journal.roll_forward(d)
+    _write(f"{d}/meta.json", json.dumps({"hash": "md5"}))
+    assert journal.watermark(d) == -1  # nothing recorded yet
 
 
 def test_commit_protocol_lives_only_in_journal_module():

@@ -6,7 +6,16 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from datapipe_spark.operators import decontam, dedup, multimodal, scrub, similarity, textstats
+from datapipe_spark.operators import (
+    decontam,
+    dedup,
+    journal,
+    multimodal,
+    scrub,
+    similarity,
+    textstats,
+    tombstones,
+)
 from tests.oracle import compare_to_oracle
 
 ORACLE_CASES = [
@@ -1713,7 +1722,7 @@ def test_compact_minhash_index_preserves_probe_and_shrinks_files(spark, tmp_path
             map(repr, spark.read.parquet(idx + "/" + p).collect())
         ) == before_rows[p]
     assert dedup_index._meta(spark, idx) == meta_before  # counts + watermark
-    assert dedup_index.last_applied_batch(spark, idx) == 2
+    assert journal.watermark(idx) == 2
     probe_after = sorted(
         map(repr, dedup_index.probe_minhash_index(spark, idx, batch).collect())
     )
@@ -2239,7 +2248,7 @@ def test_compact_minhash_index_completes_pending_commit_first(
     di.compact_minhash_index(spark, idx_torn)
     assert not os.path.exists(di._p(idx_torn, di._JOURNAL))
     assert not [n for n in os.listdir(idx_torn) if n.startswith(".staging-")]
-    assert di.last_applied_batch(spark, idx_torn) == 0
+    assert journal.watermark(idx_torn) == 0
     for part in ("mem", "sigs", "bands"):
         clean = sorted(map(tuple, spark.read.parquet(di._p(idx_clean, part)).collect()))
         torn = sorted(map(tuple, spark.read.parquet(di._p(idx_torn, part)).collect()))
@@ -2533,12 +2542,18 @@ def test_purge_minhash_index_rebuild_equality_and_semantics(spark, tmp_path):
     assert _index_rows(spark, idx) == _index_rows(spark, ref)
 
 
+def _queued(store_dir):
+    """Rows in a store's erasure queue, from the parquet footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in tombstones.pending(store_dir))
+
+
 def test_append_preserves_tombstone_queue(spark, tmp_path):
-    """r12 review: an append must carry the queued-erasure counter
-    through its meta rewrite — dropping it made readers skip the
-    tombstone anti-join (erased docs resurfacing in probes) and made
-    purge/compaction never fold the queue (the erasure obligation
-    silently lost)."""
+    """r12 review: an append must leave the queued erasure backlog in
+    place — losing it made readers skip the tombstone anti-join
+    (erased docs resurfacing in probes) and made purge/compaction
+    never fold the queue (the erasure obligation silently lost)."""
     from datapipe_spark.operators import dedup_index as di
 
     idx = str(tmp_path / "appq")
@@ -2553,9 +2568,7 @@ def test_append_preserves_tombstone_queue(spark, tmp_path):
         "doc_id long, text string",
     )
     assert di.append_minhash_index(spark, idx, batch, batch_id=0) is True
-    assert di._meta(spark, idx).get("n_tombstones", 0) == 3, (
-        "append must not drop the queued-erasure counter"
-    )
+    assert _queued(idx) == 3, "append must not drop the queued erasure"
     # the merge-on-read reader still hides the erased group
     probe = spark.createDataFrame(
         [(100, "alpha beta gamma delta epsilon zeta eta theta common group text")],
@@ -2568,8 +2581,7 @@ def test_append_preserves_tombstone_queue(spark, tmp_path):
     assert not hits & {1, 2, 3}, "erased docs must stay hidden after append"
     # ...and compaction still folds the queue physically
     di.compact_minhash_index(spark, idx)
-    assert di._meta(spark, idx).get("n_tombstones", 0) == 0
-    assert not di._has_tombstones(idx)
+    assert not tombstones.pending(idx)
     mem_ids = {
         r["doc_id"] for r in spark.read.parquet(f"{idx}/mem").collect()
     }
@@ -2609,11 +2621,10 @@ def test_build_in_place_clears_stale_store_state(spark, tmp_path):
     di.build_minhash_index(spark, corpus, idx)
     assert not _os.path.exists(di._p(idx, di._JOURNAL))
     assert not [n for n in _os.listdir(idx) if n.startswith(".staging-")]
-    assert not di._has_tombstones(idx)
-    meta = di._meta(spark, idx)
-    assert meta.get("last_batch_id") is None and meta.get("n_tombstones", 0) == 0
+    assert not tombstones.pending(idx)
+    assert di._meta(spark, idx).get("last_batch_id") is None
     # the fresh index accepts batch 0 (the stale watermark is gone)
-    assert di.last_applied_batch(spark, idx) == -1
+    assert journal.watermark(idx) == -1
     assert di.append_minhash_index(
         spark, idx,
         spark.createDataFrame(
@@ -2630,7 +2641,7 @@ def test_purge_minhash_never_seen_queue_clears_without_rewrite(
     """r11 advisory (low): a tombstone queue holding only never-indexed
     ids must fold as a queue-clear-only commit — the mem/sigs/bands
     parts stay byte-identical on disk (same inodes, no rewrite), the
-    tombstone files are deleted, and meta drops to zero queued."""
+    tombstone files are deleted, and nothing stays queued."""
     import os as _os
 
     from datapipe_spark.operators import dedup_index as di
@@ -2654,8 +2665,7 @@ def test_purge_minhash_never_seen_queue_clears_without_rewrite(
     stats = di.purge_minhash_index(spark, idx, None)
     assert stats == {"purged_docs": 0, "dropped_reps": 0, "renamed_reps": 0}
     assert inodes() == before, "a no-op fold must not rewrite any part"
-    assert di._meta(spark, idx).get("n_tombstones", 0) == 0
-    assert not di._has_tombstones(idx)
+    assert not tombstones.pending(idx)
 
 
 def test_queue_purge_minhash_equals_physical_purge(spark, tmp_path):
@@ -2689,12 +2699,11 @@ def test_queue_purge_minhash_equals_physical_purge(spark, tmp_path):
 
     assert pairs(idx_q) == pairs(idx_p)
     assert pairs(idx_q), "probe must still hit the surviving group"
-    assert di._meta(spark, idx_q)["n_tombstones"] == 4
+    assert _queued(idx_q) == 4
 
     # compaction folds the queue physically: parts equal, queue gone
     di.compact_minhash_index(spark, idx_q)
-    assert di._meta(spark, idx_q).get("n_tombstones", 0) == 0
-    assert not di._has_tombstones(idx_q)
+    assert not tombstones.pending(idx_q)
     mq, mp = di._meta(spark, idx_q), di._meta(spark, idx_p)
     assert (mq["n_docs"], mq["n_reps"]) == (mp["n_docs"], mp["n_reps"])
     for part in ("mem", "sigs", "bands"):
@@ -2711,7 +2720,7 @@ def test_purge_minhash_index_above_broadcast_gate_still_exact(
     shuffle joins and still produce the exact rebuilt index."""
     from datapipe_spark.operators import dedup_index as di
 
-    monkeypatch.setattr(di, "PURGE_BROADCAST_MAX_ROWS", 0)
+    monkeypatch.setattr(tombstones, "BACKLOG_BROADCAST_MAX_ROWS", 0)
     idx, ref = str(tmp_path / "gated"), str(tmp_path / "gref")
     corpus = _purge_corpus(spark)
     di.build_minhash_index(spark, corpus, idx)
@@ -2890,7 +2899,7 @@ def test_queue_purge_ivf_equals_physical_purge(spark, sf_dir, tmp_path):
 
     # compaction folds the queue physically and clears it
     sim.compact_ivf_index(spark, idx_q)
-    assert not sim._ivf_has_tombstones(idx_q)
+    assert not tombstones.pending(idx_q)
     cq = sorted(map(repr, spark.read.parquet(f"{idx_q}/cells").collect()))
     cp = sorted(map(repr, spark.read.parquet(f"{idx_p}/cells").collect()))
     assert cq == cp
@@ -3070,7 +3079,7 @@ def test_purge_minhash_on_appended_index_promotes_appended_member(spark, tmp_pat
     sig_ids = {r["doc_id"] for r in spark.read.parquet(f"{idx}/sigs").collect()}
     assert sig_ids == {5, 11}
     # watermark preserved; probe of near-identical content matches 5
-    assert di.last_applied_batch(spark, idx) == 0
+    assert journal.watermark(idx) == 0
     hits = di.probe_minhash_index(
         spark,
         idx,
@@ -3167,10 +3176,71 @@ def _band_index_append_case(spark, tmp_path):
     return template, op, state
 
 
-def _ivf_purge_case(spark, tmp_path):
-    """A built IVF index with one queued tombstone, and a purge of two
-    more ids: the commit swaps the touched cells and deletes the
-    folded tombstone files."""
+def _queue_rows(d):
+    """Row multiset of a store's erasure queue, read without Spark."""
+    import pyarrow.parquet as pq
+
+    return sorted(
+        repr(r) for f in tombstones.pending(d) for r in pq.read_table(f).to_pylist()
+    )
+
+
+def _band_index_queue_case(spark, tmp_path):
+    """A built band index with one queued doc_id, and a queue request
+    naming it again plus two more: a moves-only commit that adds only
+    the two new ids."""
+    from datapipe_spark.operators import dedup_index as di
+
+    template, _op, _state = _band_index_append_case(spark, tmp_path)
+    di.queue_purge_minhash_index(
+        spark, template, spark.createDataFrame([(0,)], "doc_id long")
+    )
+    ids = spark.createDataFrame([(0,), (2,), (3,)], "doc_id long")
+
+    def op(d):
+        di.queue_purge_minhash_index(spark, d, ids)
+
+    def state(d):
+        return _queue_rows(d), di._meta(spark, d)
+
+    return template, op, state
+
+
+def _scd2_queue_case(spark, tmp_path):
+    """An SCD2 store holding one increment and one queued key, and a
+    queue request naming it again plus two more keys."""
+    import datetime as dt
+
+    from datapipe_spark.operators import scd2
+
+    t = dt.datetime(2024, 1, 1)
+    template = str(tmp_path / "tmpl")
+    scd2.scd2_init(spark, template, n_buckets=2)
+    scd2.scd2_upsert(
+        spark,
+        template,
+        spark.createDataFrame(
+            [(i, i, "A", "1.00", t, "c", t, i) for i in range(1, 6)],
+            "id long, user_id long, status string, total_amount string, "
+            "created_at timestamp, __op string, __ts_ms timestamp, "
+            "__source_lsn long",
+        ),
+        batch_id=0,
+    )
+    scd2.scd2_queue_purge(spark, template, spark.createDataFrame([(1,)], "id long"))
+    keys = spark.createDataFrame([(1,), (2,), (3,)], "id long")
+
+    def op(d):
+        scd2.scd2_queue_purge(spark, d, keys)
+
+    def state(d):
+        return _queue_rows(d), scd2._meta(d)
+
+    return template, op, state
+
+
+def _ivf_template(spark, tmp_path):
+    """A built 40-vector IVF index with one queued vec_id."""
     import os as _os
 
     from datapipe_spark.operators import similarity as sim
@@ -3188,21 +3258,60 @@ def _ivf_purge_case(spark, tmp_path):
     sim.queue_purge_ivf_index(
         spark, template, spark.createDataFrame([(3,)], "vec_id long")
     )
+    return template
+
+
+def _ivf_purge_case(spark, tmp_path):
+    """A built IVF index with one queued tombstone, and a purge of two
+    more ids: the commit swaps the touched cells and deletes the
+    folded tombstone files."""
+    from datapipe_spark.operators import similarity as sim
+
+    template = _ivf_template(spark, tmp_path)
     purge = spark.createDataFrame([(7,), (11,)], "vec_id long")
 
     def op(d):
         sim.purge_ivf_index(spark, d, purge)
 
     def state(d):
-        return _arrow_rows(f"{d}/cells"), sim._ivf_has_tombstones(d)
+        return _arrow_rows(f"{d}/cells"), bool(tombstones.pending(d))
+
+    return template, op, state
+
+
+def _ivf_queue_case(spark, tmp_path):
+    """A built IVF index with one queued vec_id, and a queue request
+    naming it again plus two more."""
+    from datapipe_spark.operators import similarity as sim
+
+    template = _ivf_template(spark, tmp_path)
+    ids = spark.createDataFrame([(3,), (7,), (11,)], "vec_id long")
+
+    def op(d):
+        sim.queue_purge_ivf_index(spark, d, ids)
+
+    def state(d):
+        return _queue_rows(d), _arrow_rows(f"{d}/cells")
 
     return template, op, state
 
 
 @pytest.mark.parametrize(
     "case",
-    [_band_index_append_case, _ivf_purge_case],
-    ids=["band_index_append", "ivf_purge"],
+    [
+        _band_index_append_case,
+        _ivf_purge_case,
+        _band_index_queue_case,
+        _scd2_queue_case,
+        _ivf_queue_case,
+    ],
+    ids=[
+        "band_index_append",
+        "ivf_purge",
+        "band_index_queue",
+        "scd2_queue",
+        "ivf_queue",
+    ],
 )
 def test_store_crash_sweep_every_fs_step(spark, tmp_path, crash_gate, case):
     """Crash a journaled store commit after every filesystem step in the
@@ -3240,6 +3349,34 @@ def test_store_crash_sweep_every_fs_step(spark, tmp_path, crash_gate, case):
             completed_without_crash = True
             break
     assert completed_without_crash, "sweep never reached the clean-run budget"
+
+
+def test_probe_plan_build_submits_no_spark_job(spark, tmp_path):
+    """Building the band-index probe plan reads mem/sigs/bands under
+    their declared schemas: no schema-inference job runs before the
+    caller's action."""
+    import uuid
+
+    from datapipe_spark.operators import dedup_index as di
+
+    template, _op, _state = _band_index_append_case(spark, tmp_path)
+    batch = spark.createDataFrame(
+        [(90, "a probe document with plenty of distinct shingle words")],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        _out, bmem, bsigs = di._probe_plan(spark, template, batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    bmem.unpersist()
+    bsigs.unpersist()
+    assert tracker.getJobIdsForGroup(group) == []
 
 
 def test_compact_minhash_index_pooled_jobs_keep_job_group(spark, tmp_path):

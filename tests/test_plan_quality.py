@@ -709,6 +709,7 @@ def test_ivf_tombstone_fold_broadcasts_and_vanishes_when_empty(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from datapipe_spark.operators import similarity as sim
+    from datapipe_spark.operators import tombstones
 
     base = str(tmp_path / "ivf_mor")
     vecs = spark.range(100).select(
@@ -724,7 +725,7 @@ def test_ivf_tombstone_fold_broadcasts_and_vanishes_when_empty(spark, tmp_path):
     )
     idx = spark.read.parquet(base + "/cells").filter(F.col("qcell").isin([7]))
     plan = (
-        sim._ivf_minus_tombstones(spark, base, idx)
+        tombstones.fold(spark, base, idx, "vec_id")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -733,9 +734,9 @@ def test_ivf_tombstone_fold_broadcasts_and_vanishes_when_empty(spark, tmp_path):
     assert "SortMergeJoin" not in plan and "Cartesian" not in plan, plan
 
     sim.purge_ivf_index(spark, base, None)  # fold clears the queue
-    assert not sim._ivf_has_tombstones(base)
+    assert not tombstones.pending(base)
     plan2 = (
-        sim._ivf_minus_tombstones(spark, base, idx)
+        tombstones.fold(spark, base, idx, "vec_id")
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -12,6 +12,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from datapipe_spark.operators import journal
 from datapipe_spark.plans import events_queries as ev
 from datapipe_spark.streaming import jobs
 from datapipe_spark.streaming import source as src
@@ -823,7 +824,6 @@ def test_index_append_replay_is_exactly_once(spark, tmp_path):
         _p,
         append_minhash_index,
         build_minhash_index,
-        last_applied_batch,
         probe_minhash_index,
     )
 
@@ -839,7 +839,7 @@ def test_index_append_replay_is_exactly_once(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     build_minhash_index(spark, corpus, idx)
-    assert last_applied_batch(spark, idx) == -1
+    assert journal.watermark(idx) == -1
 
     def counts():
         return tuple(
@@ -858,11 +858,11 @@ def test_index_append_replay_is_exactly_once(spark, tmp_path):
     )
     assert append_minhash_index(spark, idx, b0, batch_id=0) is True
     after0 = counts()
-    assert after0 > base and last_applied_batch(spark, idx) == 0
+    assert after0 > base and journal.watermark(idx) == 0
 
     # crash-after-append replay: same batch id → no-op, counts frozen
     assert append_minhash_index(spark, idx, b0, batch_id=0) is False
-    assert counts() == after0 and last_applied_batch(spark, idx) == 0
+    assert counts() == after0 and journal.watermark(idx) == 0
 
     # crash-BEFORE-append replay: sink written, append never ran. The
     # job writes each batch to its own overwrite dir keyed by batch id.
@@ -879,7 +879,7 @@ def test_index_append_replay_is_exactly_once(spark, tmp_path):
     sunk = spark.read.parquet(os.path.join(sink, "b_00001"))
     assert sunk.count() == sunk.dropDuplicates().count() > 0
     assert append_minhash_index(spark, idx, b1, batch_id=1) is True
-    assert last_applied_batch(spark, idx) == 1
+    assert journal.watermark(idx) == 1
 
 
 def test_torn_index_append_commit_recovers_exactly_once(spark, tmp_path, monkeypatch):
@@ -941,13 +941,13 @@ def test_torn_index_append_commit_recovers_exactly_once(spark, tmp_path, monkeyp
     # read as applied (r12 review: returning -1 here let a replayed
     # probe re-run against an index that contained its own batch)
     assert os.path.exists(di._p(idx_torn, di._JOURNAL))
-    assert di.last_applied_batch(spark, idx_torn) == 0
+    assert journal.watermark(idx_torn) == 0
 
     # replay after restart: entry recovery completes the journaled
     # commit (idempotent moves + meta), then the watermark skips the
     # re-append — applied exactly once
     assert di.append_minhash_index(spark, idx_torn, batch, batch_id=0) is False
-    assert di.last_applied_batch(spark, idx_torn) == 0
+    assert journal.watermark(idx_torn) == 0
     assert not os.path.exists(di._p(idx_torn, di._JOURNAL))
     assert not [n for n in os.listdir(idx_torn) if n.startswith(".staging-")]
 
@@ -963,7 +963,7 @@ def test_torn_index_append_commit_recovers_exactly_once(spark, tmp_path, monkeyp
     nxt = mk([(200, "another novel batch document lambda mu nu xi omicron pi")])
     assert di.append_minhash_index(spark, idx_torn, nxt, batch_id=1) is True
     assert not [n for n in os.listdir(idx_torn) if n.startswith(".staging-")]
-    assert di.last_applied_batch(spark, idx_torn) == 1
+    assert journal.watermark(idx_torn) == 1
 
 
 def test_append_commit_barrier_failure_aborts_pre_commit(spark, tmp_path):
@@ -1012,12 +1012,12 @@ def test_append_commit_barrier_failure_aborts_pre_commit(spark, tmp_path):
         )
     # pre-commit abort: no journal, watermark unmoved, live dirs intact
     assert not os.path.exists(di._p(idx, di._JOURNAL))
-    assert di.last_applied_batch(spark, idx) == -1
+    assert journal.watermark(idx) == -1
     assert counts() == base
     # the replayed batch (sink now "succeeds") applies exactly once,
     # and the failed attempt's staging debris is swept by this entry
     assert di.append_minhash_index(spark, idx, batch, batch_id=0) is True
-    assert di.last_applied_batch(spark, idx) == 0
+    assert journal.watermark(idx) == 0
     assert counts() > base
     assert not [n for n in os.listdir(idx) if n.startswith(".staging-")]
 
@@ -1035,7 +1035,6 @@ def test_live_trigger_probe_then_append_mutates_index(spark, tmp_path):
         _probe_plan,
         append_minhash_index,
         build_minhash_index,
-        last_applied_batch,
     )
 
     def mk(rows):
@@ -1059,7 +1058,7 @@ def test_live_trigger_probe_then_append_mutates_index(spark, tmp_path):
     drop(0, [(10, text + " batch zero body")])
 
     def probe_then_append(bdf, bid):
-        if bid <= last_applied_batch(spark, idx):
+        if bid <= journal.watermark(idx):
             return
         out, bmem, bsigs = _probe_plan(spark, idx, bdf)
         out.write.mode("overwrite").parquet(os.path.join(sink, f"b_{bid:05d}"))
@@ -1081,19 +1080,19 @@ def test_live_trigger_probe_then_append_mutates_index(spark, tmp_path):
         # wait when the first runs long under suite load), fail fast
         # on a dead query
         deadline = time.time() + 180
-        while last_applied_batch(spark, idx) < 0 and time.time() < deadline:
+        while journal.watermark(idx) < 0 and time.time() < deadline:
             assert q.exception() is None, q.exception()
             time.sleep(0.5)
-        assert last_applied_batch(spark, idx) >= 0, "batch 0 never applied"
+        assert journal.watermark(idx) >= 0, "batch 0 never applied"
         # batch 1 lands while the query is live: near-dup of batch 0's doc
         drop(1, [(20, text + " batch zero body")])
         deadline = time.time() + 180
-        while last_applied_batch(spark, idx) < 1 and time.time() < deadline:
+        while journal.watermark(idx) < 1 and time.time() < deadline:
             assert q.exception() is None, q.exception()
             time.sleep(0.5)
     finally:
         q.stop()
-    assert last_applied_batch(spark, idx) == 1
+    assert journal.watermark(idx) == 1
     out = (
         spark.read.schema("new_doc_id long, corpus_doc_id long, jaccard double")
         .option("recursiveFileLookup", "true")
@@ -1289,7 +1288,7 @@ def test_purge_interleaved_with_streaming_appends_exactly_once(spark, tmp_path):
         spark, idx, spark.createDataFrame([(2,), (11,)], "doc_id long")
     )
     assert stats["purged_docs"] == 2
-    assert di.last_applied_batch(spark, idx) == 0  # watermark untouched
+    assert journal.watermark(idx) == 0  # watermark untouched
 
     # a crash-replay of batch 0 is still skipped — purged docs do NOT
     # sneak back in through the replay
@@ -1306,7 +1305,7 @@ def test_purge_interleaved_with_streaming_appends_exactly_once(spark, tmp_path):
         (22, 10),
     }
     assert di.append_minhash_index(spark, idx, b1, batch_id=1) is True
-    assert di.last_applied_batch(spark, idx) == 1
+    assert journal.watermark(idx) == 1
     mem_ids = {r["doc_id"] for r in spark.read.parquet(f"{idx}/mem").collect()}
     assert mem_ids == {1, 10, 20, 21, 22}
 
