@@ -5,8 +5,10 @@ STRESS_OPS ?= dedup_exact,dedup_minhash_lsh,dedup_simhash,dedup_pipeline,dedup_c
 
 .PHONY: test bench perfbench perfbench-trace perfbench-ab sweep stress stress-100
 
+# the tier-1 command of ROADMAP.md, environment and timeout included
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+		timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -6,7 +6,7 @@ scale path: shingle → minhash signature → banded bucket-join), and
 SimHash (bitwise near-dup with banded Hamming search).
 
 All of the shingle/signature/band computation is JVM-side array
-expressions (``transform``/``aggregate``/``xxhash64``) — no Python in
+expressions (``transform``/``aggregate``/``md5``) — no Python in
 the per-document path.
 
 Scale notes: exact + minhash + simhash are linear scans plus
@@ -40,20 +40,13 @@ JACCARD_THRESHOLD = 0.8
 GUARD_ACTIVATIONS: dict[str, int] = {"minhash_band_cap": 0, "simhash_band_cap": 0}
 
 
-def _hash_expr(inner: str, hash: str) -> str:
-    """SQL fragment hashing ``inner`` under one of the two hash
-    families every dedup operator offers — THE single definition:
-    ``md5`` = portable 60-bit parse of the first 15 digest hex chars
-    (bit-identical in DuckDB, oracle-checkable), ``xxhash64`` = one
-    cheap 64-bit hash (the 100 TB path). Unknown names are an error,
-    not a silent fallback."""
-    if hash not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash family {hash!r}; use 'md5' or 'xxhash64'")
-    return (
-        f"cast(conv(substring(md5({inner}), 1, 15), 16, 10) as bigint)"
-        if hash == "md5"
-        else f"xxhash64({inner})"
-    )
+def _hash_expr(inner: str) -> str:
+    """SQL fragment hashing ``inner`` — THE single definition of the
+    shingle/token hash every near-dup operator uses: a 60-bit parse of
+    the first 15 md5 digest hex chars, bit-identical in DuckDB
+    (``('0x'||…)::BIGINT``), so every pipeline built on it is
+    oracle-checkable."""
+    return f"cast(conv(substring(md5({inner}), 1, 15), 16, 10) as bigint)"
 
 
 def _shingles(text_col: str = "text", n: int = 3) -> F.Column:
@@ -326,19 +319,16 @@ SELECT doc_a, doc_b, jaccard FROM pairs WHERE jaccard >= {JACCARD_THRESHOLD}
 """
 
 
-def minhash_signatures(docs: DataFrame, hash: str = "md5") -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """MinHash signatures (32 perms) from hashed shingles — pure array
     expressions, linear scan.
 
-    The permutation family ``(a·h + b) mod p`` is plain arithmetic, so
-    signatures are engine-portable whenever the base shingle hash is:
-    ``hash="md5"`` (default) parses the first 15 hex chars of the md5
-    digest to a 60-bit int — bit-identical in DuckDB (``('0x'||…)::
-    BIGINT``), which makes the whole LSH pipeline oracle-checkable.
-    ``hash="xxhash64"`` is the cheaper engine-specific variant for the
-    100 TB path (one 64-bit hash vs md5's 128-bit + hex parse).
+    The permutation family ``(a·h + b) mod p`` is plain arithmetic over
+    the portable shingle hash (``_hash_expr``), so signatures are
+    bit-identical in DuckDB, which makes the whole LSH pipeline
+    oracle-checkable.
     """
-    base = f"pmod({_hash_expr('s', hash)}, {_P}L)"
+    base = f"pmod({_hash_expr('s')}, {_P}L)"
     sig = F.array(
         *[
             F.expr(
@@ -466,23 +456,15 @@ def _expand_rep_pairs(
     return cross.unionByName(within)
 
 
-def band_rows(sigs: DataFrame, hash: str = "md5") -> DataFrame:
+def band_rows(sigs: DataFrame) -> DataFrame:
     """Explode a signature frame into LSH band rows ``(doc_id, band_id,
     band_key)`` — the join surface of the band index. Rows carry ONLY
-    the band key (string in md5 mode, int64 in xxhash64 mode): the
-    ``_BANDS``× explode shuffles the key, never the shingle arrays."""
-    if hash == "md5":
-        band_exprs = [
-            "concat_ws(','," + ", ".join(f"signature[{j * _ROWS + r}]" for r in range(_ROWS)) + ")"
-            for j in range(_BANDS)
-        ]
-    else:
-        band_exprs = [
-            "xxhash64("
-            + ", ".join([str(j)] + [f"signature[{j * _ROWS + r}]" for r in range(_ROWS)])
-            + ")"
-            for j in range(_BANDS)
-        ]
+    the string band key: the ``_BANDS``× explode shuffles the key,
+    never the shingle arrays."""
+    band_exprs = [
+        "concat_ws(','," + ", ".join(f"signature[{j * _ROWS + r}]" for r in range(_ROWS)) + ")"
+        for j in range(_BANDS)
+    ]
     return sigs.select(
         "doc_id",
         F.posexplode(F.array(*[F.expr(e) for e in band_exprs])).alias(
@@ -509,7 +491,7 @@ def banded_pair_candidates(
     under ``bucket_cap`` — the common case everywhere measured (max
     width ≤ 3 at sf0.1 vs cap 512) — the plain pairwise self-join runs
     and output is exactly the unguarded plan's. Above the cap, only
-    possible under genuine density (band keys are 4-value md5/xxhash64
+    possible under genuine density (band keys are 4-value md5
     compounds, so unlike simhash's 7-8 bit band keyspace there is no
     saturation hazard — a wide bucket means near-identical,
     non-verbatim content, the paraphrase-mill corpus), over-cap buckets
@@ -579,7 +561,7 @@ def banded_pair_candidates(
 
 
 def minhash_rep_candidates(
-    docs: DataFrame, hash: str = "md5", bucket_cap: int = MINHASH_BUCKET_CAP
+    docs: DataFrame, bucket_cap: int = MINHASH_BUCKET_CAP
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Collapse verbatim copies, sign the representatives, and band-join
     them into candidate pairs. Returns ``(mem, sigs, candidates)`` —
@@ -595,17 +577,14 @@ def minhash_rep_candidates(
     # project the raw text OFF before caching (r12 review): the cache
     # holds the plan's full schema, and nothing downstream reads text —
     # at corpus scale the un-projected cache held every rep's document
-    sigs = minhash_signatures(reps, hash=hash).select(
-        "doc_id", "_sh", "signature"
-    ).persist()
-    bands = band_rows(sigs, hash=hash)
+    sigs = minhash_signatures(reps).select("doc_id", "_sh", "signature").persist()
+    bands = band_rows(sigs)
     candidates = banded_pair_candidates(bands, bucket_cap=bucket_cap)
     return mem, sigs, candidates
 
 
 def minhash_dedup(
-    spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD,
-    hash: str = "md5",
+    spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """MinHash+LSH near-dup detection — the scale path.
 
@@ -618,32 +597,23 @@ def minhash_dedup(
     (P(candidate) = 1-(1-s^4)^8), and a verbatim mega-cluster of any
     size occupies one band-join row instead of going quadratic.
 
-    ``hash="md5"`` (default): portable signatures (see
-    ``minhash_signatures``), string band keys, string-set verification
-    — deterministic and DuckDB-oracled (``MINHASH_DEDUP_SQL`` replays
-    the band join un-collapsed; output is provably identical because
-    identical texts have identical signatures). ``hash="xxhash64"``:
-    8-byte band keys and int64 verification sets — the cheaper shuffle
-    for the 100 TB path.
+    Portable signatures (see ``minhash_signatures``), string band keys,
+    string-set verification — deterministic and DuckDB-oracled
+    (``MINHASH_DEDUP_SQL`` replays the band join un-collapsed; output
+    is provably identical because identical texts have identical
+    signatures).
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return minhash_dedup_frame(docs, threshold=threshold, hash=hash)
+    return minhash_dedup_frame(docs, threshold=threshold)
 
 
 def _verify_rep_jaccard(
-    sigs: DataFrame, candidates: DataFrame, threshold: float, hash: str
+    sigs: DataFrame, candidates: DataFrame, threshold: float
 ) -> DataFrame:
     """Exact-jaccard verification of rep-level ``(rep_a, rep_b)``
-    candidates — on the raw shingle strings in portable (md5) mode
-    (byte-identical to the oracle), on hashed int64 sets in xxhash64
-    mode (cheaper compare). Returns verified pairs ≥ threshold."""
-    sets = sigs.select(
-        "doc_id",
-        (
-            F.col("_sh") if hash == "md5"
-            else F.expr("transform(_sh, s -> xxhash64(s))")
-        ).alias("hs"),
-    )
+    candidates on the raw shingle strings (byte-identical to the
+    oracle). Returns verified pairs ≥ threshold."""
+    sets = sigs.select("doc_id", F.col("_sh").alias("hs"))
     verified = candidates.join(
         sets.select(F.col("doc_id").alias("rep_a"), F.col("hs").alias("sh_a")), "rep_a"
     ).join(sets.select(F.col("doc_id").alias("rep_b"), F.col("hs").alias("sh_b")), "rep_b")
@@ -657,12 +627,12 @@ def _verify_rep_jaccard(
 
 
 def minhash_dedup_frame(
-    docs: DataFrame, threshold: float = JACCARD_THRESHOLD, hash: str = "md5"
+    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """MinHash+LSH over any ``(doc_id, text)`` frame — see
     ``minhash_dedup`` for semantics and scale notes."""
-    mem, sigs, candidates = minhash_rep_candidates(docs, hash=hash)
-    rep_pairs = _verify_rep_jaccard(sigs, candidates, threshold, hash)
+    mem, sigs, candidates = minhash_rep_candidates(docs)
+    rep_pairs = _verify_rep_jaccard(sigs, candidates, threshold)
     from datapipe_spark.util import materialize_and_release
 
     return materialize_and_release(
@@ -792,7 +762,6 @@ def dedup_cross_corpus_minhash(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = JACCARD_THRESHOLD,
-    hash: str = "md5",
 ) -> DataFrame:
     """Near-dup probe of the incoming batch against the corpus
     MinHash/LSH index → oriented ``(new_doc_id, corpus_doc_id,
@@ -809,20 +778,16 @@ def dedup_cross_corpus_minhash(
     batch-invariant — the persisted-index role at 100 TB; per batch the
     work is sign-the-batch plus equi-joins against the index.
     """
-    return cross_corpus_minhash_frame(
-        _cross_tagged(spark, sf_dir), threshold=threshold, hash=hash
-    )
+    return cross_corpus_minhash_frame(_cross_tagged(spark, sf_dir), threshold=threshold)
 
 
 def cross_corpus_minhash_frame(
-    docs: DataFrame, threshold: float = JACCARD_THRESHOLD, hash: str = "md5"
+    docs: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
     """Cross-corpus near-dup probe over any ``(doc_id, text, is_new)``
     frame — see ``dedup_cross_corpus_minhash`` for semantics."""
     tags = docs.select("doc_id", "is_new")
-    mem, sigs, candidates = minhash_rep_candidates(
-        docs.select("doc_id", "text"), hash=hash
-    )
+    mem, sigs, candidates = minhash_rep_candidates(docs.select("doc_id", "text"))
     reach = (
         mem.join(tags, "doc_id")
         .groupBy("rep_id")
@@ -847,7 +812,7 @@ def cross_corpus_minhash_frame(
         .filter((F.col("_an") & F.col("_bc")) | (F.col("_ac") & F.col("_bn")))
         .select("rep_a", "rep_b")
     )
-    rep_pairs = _verify_rep_jaccard(sigs, cross_cand, threshold, hash)
+    rep_pairs = _verify_rep_jaccard(sigs, cross_cand, threshold)
     # within-group expansion restricted to new×corpus member pairs
     # (r12 review): a corpus-side-only verbatim mega-cluster previously
     # expanded quadratically only to be dropped by the orientation
@@ -1054,7 +1019,7 @@ def dedup_pipeline_frame(
         "doc_id", "_sh", "signature"
     ).persist()  # text projected off before caching (r12 review)
     cand = banded_pair_candidates(band_rows(sigs), bucket_cap=bucket_cap)
-    pairs = _verify_rep_jaccard(sigs, cand, JACCARD_THRESHOLD, "md5")
+    pairs = _verify_rep_jaccard(sigs, cand, JACCARD_THRESHOLD)
     from datapipe_spark.util import materialize_and_release
 
     # the near-dup decision table is O(near dups) — checkpoint it and
@@ -1111,18 +1076,14 @@ def _band_layout(n_bits: int, n_bands: int = _BANDS) -> list[tuple[int, int]]:
     return list(zip(offs, widths))
 
 
-def simhash_dedup(
-    spark: SparkSession, sf_dir: str, max_hamming: int = 7, hash: str = "md5"
-) -> DataFrame:
+def simhash_dedup(spark: SparkSession, sf_dir: str, max_hamming: int = 7) -> DataFrame:
     """SimHash near-dup detection: shingle-feature simhash, banded
     Hamming search (8 disjoint bands — a pair within Hamming ≤ 7 must
     agree exactly on ≥ 1 band, by pigeonhole).
 
-    ``hash="md5"`` (default): 60-bit simhash from md5 hex parses —
-    engine-portable bit votes, so the whole operator is DuckDB-oracled
-    (``SIMHASH_DEDUP_SQL`` replays votes, packing, bands, and Hamming
-    bit-for-bit). ``hash="xxhash64"``: 64-bit variant, one cheap hash
-    per shingle — the 100 TB path.
+    60-bit simhash from md5 hex parses — engine-portable bit votes, so
+    the whole operator is DuckDB-oracled (``SIMHASH_DEDUP_SQL`` replays
+    votes, packing, bands, and Hamming bit-for-bit).
 
     Features are word 3-gram shingles (not unigrams): on vocabulary-
     dense corpora unigram bags barely differ between unrelated
@@ -1144,14 +1105,14 @@ def simhash_dedup(
     recall anchor there.
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return simhash_dedup_frame(d, max_hamming=max_hamming, hash=hash)
+    return simhash_dedup_frame(d, max_hamming=max_hamming)
 
 
 def _md5_fingerprints_arrow(reps: DataFrame) -> DataFrame:
     """(doc_id, simhash) for every representative doc, computed in one
     Arrow-batched map pass — see ``_rep_fingerprints`` for why this is
     bit-identical to (and replaces) the explode/aggregate expression
-    form in md5 mode. Documents with no shingles (NULL text or < 3
+    form. Documents with no shingles (NULL text or < 3
     words) emit no row, exactly as the exploded form's empty groups.
     The vote matrix is chunked so a pathological million-shingle doc
     stays within a bounded numpy temp instead of an O(shingles × 60)
@@ -1220,13 +1181,13 @@ def _md5_fingerprints_arrow(reps: DataFrame) -> DataFrame:
     return reps.select("doc_id", "text").mapInPandas(_fp_batches, out_schema)
 
 
-def _rep_fingerprints(d: DataFrame, hash: str = "md5"):
+def _rep_fingerprints(d: DataFrame):
     """Verbatim-collapse + per-representative simhash fingerprints.
     Returns ``(mem, sh)``: ``mem`` the persisted text-copy membership
     (caller releases), ``sh`` the lazy (doc_id, simhash) frame over
     text representatives.
 
-    Fingerprint math, md5 mode (the oracled default): ZERO-shuffle
+    Fingerprint math: ZERO-shuffle
     Arrow pass (r13, guide §2.4 + §4.2) — one ``mapInPandas`` over the
     text representatives computes shingling, md5, distinct-shingle bit
     votes and packing per document in vectorized numpy, emitting only
@@ -1244,80 +1205,19 @@ def _rep_fingerprints(d: DataFrame, hash: str = "md5"):
     majority 2·count_i > n (ties pack 0) — equality locked by
     ``exceptAll`` in both directions over the full sf0.1 corpus when
     the swap landed, and by tests/test_llm_ops.py's oracle replay.
-
-    xxhash64 mode (the cheap-hash 100 TB variant) keeps the previous
-    expression form — Spark's seed-42 xxhash64 has no cheap Python
-    twin, and that mode's per-shingle hash is already one codegen'd
-    JVM op: explode → hash → branch-free LANE-PACKED bit sums
-    (map-side partial agg halves the shuffle; three bit-counters
-    share one 64-bit accumulator in 20-bit lanes — sound for ≤ 2^20
-    distinct shingles per document — so 64 bits need 22 SUM columns,
-    3× narrower partial-agg/shuffle rows). The ±1 vote per bit is
-    recovered arithmetically post-agg: vote_i > 0 ⟺ 2·count_i > n.
-    NOTE a per-document array-fold ("zero shuffle") JVM formulation
-    was tried and rejected in r5: Spark's higher-order array
-    functions execute interpreted (no whole-stage codegen), making
-    the 64-counter fold ~30× slower than the codegen'd aggregates.
     """
-    n_bits = 60 if hash == "md5" else 64
     mem = _collapse_exact(d).persist()
-    reps = _rep_docs(d, mem)
-    if hash == "md5":
-        return mem, _md5_fingerprints_arrow(reps)
-    base = _hash_expr("tok", hash)
-    toks = (
-        reps.withColumn("_sh", _shingles())
-        .select("doc_id", F.explode("_sh").alias("tok"))
-        .select("doc_id", F.expr(base).alias("h"))
-    )
-    _LANE = 20  # bits per packed counter lane
-    groups = [list(range(g, min(g + 3, n_bits))) for g in range(0, n_bits, 3)]
-
-    def _packed(bits: list[int]) -> F.Column:
-        col = F.lit(0).cast("long")
-        for lane, i in enumerate(bits):
-            col = col + F.shiftleft(
-                F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)).cast("long"),
-                lane * _LANE,
-            )
-        return F.sum(col)
-
-    bit_sums = toks.groupBy("doc_id").agg(
-        F.count("*").alias("_n"),
-        *[_packed(bits).alias(f"g{gi}") for gi, bits in enumerate(groups)],
-    )
-
-    def _count(i: int) -> F.Column:  # unpack bit i's set-count lane
-        gi, lane = i // 3, i % 3
-        return F.shiftright(F.col(f"g{gi}"), lane * _LANE).bitwiseAND(
-            F.lit((1 << _LANE) - 1)
-        )
-
-    halfw = n_bits // 2
-    half = lambda lo: sum(  # noqa: E731 — build halves, then pack
-        (
-            F.when(_count(i) * 2 > F.col("_n"), F.lit(1 << (i - lo))).otherwise(F.lit(0))
-            for i in range(lo, lo + halfw)
-        ),
-        start=F.lit(0),
-    )
-    sh = bit_sums.select(
-        "doc_id",
-        F.shiftleft(half(halfw).cast("long"), halfw)
-        .bitwiseOR(half(0).cast("long"))
-        .alias("simhash"),
-    )
-    return mem, sh
+    return mem, _md5_fingerprints_arrow(_rep_docs(d, mem))
 
 
-def simhash_fingerprints_frame(d: DataFrame, hash: str = "md5") -> DataFrame:
+def simhash_fingerprints_frame(d: DataFrame) -> DataFrame:
     """Per-document simhash fingerprint (doc_id, simhash) for any
     (doc_id, text) frame — the signature front half of
     ``simhash_dedup_frame`` projected back onto every member doc.
     Diagnostic/test surface for the density premise of the
     identical-fingerprint guard (near-verbatim clusters concentrate
     onto few distinct fingerprints)."""
-    mem, sh = _rep_fingerprints(d, hash)
+    mem, sh = _rep_fingerprints(d)
     out = (
         mem.select("doc_id", "rep_id")
         .join(sh.withColumnRenamed("doc_id", "rep_id"), "rep_id")
@@ -1334,8 +1234,7 @@ SIMHASH_BUCKET_CAP = 256  # band-bucket width guard threshold
 
 
 def simhash_dedup_frame(
-    d: DataFrame, max_hamming: int = 7, hash: str = "md5",
-    bucket_cap: int = SIMHASH_BUCKET_CAP,
+    d: DataFrame, max_hamming: int = 7, bucket_cap: int = SIMHASH_BUCKET_CAP
 ) -> DataFrame:
     """SimHash near-dup pairs over any ``(doc_id, text)`` frame — see
     ``simhash_dedup`` for semantics and scale notes.
@@ -1355,7 +1254,7 @@ def simhash_dedup_frame(
        ~1-3 low-margin bits even in long documents, so such clusters
        scatter across many distinct fingerprints — that case is #3's.)
     2. *Adjacent-band sub-split* (the keyspace-saturation hazard): 8
-       bands over 60/64 bits leave only 7-8 bits per band — ~181/256
+       bands over 60 bits leave only 7-8 bits per band — ~181/256
        buckets — so once the number of distinct fingerprints outgrows
        the keyspace, unrelated docs pile into every bucket (measured
        on a 10×-replicated sf0.1 pre-guard: ~55M candidate pairs,
@@ -1403,15 +1302,14 @@ def simhash_dedup_frame(
     the cap); equality is locked by the unchanged CORRECTNESS hash and
     the guard-inactive test.
     """
-    n_bits = 60 if hash == "md5" else 64
-    mem, sh = _rep_fingerprints(d, hash)
+    mem, sh = _rep_fingerprints(d)
     # persisted: the activation probe consumes the fingerprints once,
     # and whichever plan wins consumes them again
     sh = sh.persist()
     band_arr = F.array(
         *[
             F.shiftright(F.col("simhash"), off).bitwiseAND(F.lit((1 << w) - 1))
-            for off, w in _band_layout(n_bits)
+            for off, w in _band_layout(60)
         ]
     )
     rep_bands = sh.select(
@@ -1947,9 +1845,7 @@ FROM allq a JOIN sizes s USING (cluster_id)
 DUP_SPAN_K = 8  # minimum verbatim run, in tokens
 
 
-def substring_dup_spans(
-    spark: SparkSession, sf_dir: str, k: int = DUP_SPAN_K, hash: str = "md5"
-) -> DataFrame:
+def substring_dup_spans(spark: SparkSession, sf_dir: str, k: int = DUP_SPAN_K) -> DataFrame:
     """Verbatim substring dedup: maximal token spans that appear
     word-for-word in ≥ 2 documents (the substring-granular complement
     to the document-level dedups — boilerplate, license headers, and
@@ -1973,12 +1869,10 @@ def substring_dup_spans(
     join.
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return substring_dup_spans_frame(d, k, hash=hash)
+    return substring_dup_spans_frame(d, k)
 
 
-def substring_dup_spans_frame(
-    d: DataFrame, k: int = DUP_SPAN_K, hash: str = "md5"
-) -> DataFrame:
+def substring_dup_spans_frame(d: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     """Span detection over any (doc_id, text) frame — see
     ``substring_dup_spans`` for semantics and scale notes."""
     # Positional k-gram strings via the zip-with-shifts chain (same
@@ -1990,13 +1884,10 @@ def substring_dup_spans_frame(
     # exploding the gram strings and hashing them in whole-stage
     # codegen (measured 2.25 s → 0.85 s for the gram table at sf0.1);
     # still map-only, no new shuffle.
-    # hash="md5" (default): digests parsed to 60-bit ints (the same
-    # portable parse as minhash) — the frequency filter and join
-    # shuffle 8-byte keys instead of 32-char strings, and DuckDB
-    # reproduces the value bit-for-bit. hash="xxhash64": one cheap
-    # 64-bit hash per gram — the 100 TB path (~2× less hash CPU).
-    # Output (span POSITIONS, not hashes) is identical under either
-    # family absent collisions (|grams|²/2⁶⁰ ≈ 0) — parity-tested.
+    # Digests parsed to 60-bit ints (the same portable parse as
+    # minhash): the frequency filter and join shuffle 8-byte keys
+    # instead of 32-char strings, and DuckDB reproduces the value
+    # bit-for-bit.
     w_arr = "split(text, ' ')"
     chain = w_arr
     for j in range(1, k):
@@ -2009,7 +1900,7 @@ def substring_dup_spans_frame(
         .select(
             "doc_id",
             (F.col("_p0") + 1).cast("long").alias("pos"),
-            F.expr(_hash_expr("_gs", hash)).alias("gram"),
+            F.expr(_hash_expr("_gs")).alias("gram"),
         )
         # consumed by the frequency filter AND the join-back: cache the
         # positional gram table instead of hashing the corpus twice

@@ -13,7 +13,7 @@ zero band rows (the skew guard holds incrementally).
 
 Layout under ``index_dir``::
 
-    meta.json  {hash, n_docs, n_reps}     the index contract (JSON
+    meta.json  {n_docs, n_reps}           the index contract (JSON
                                           sidecar, refreshed on every
                                           append; a catalog row in
                                           production)
@@ -22,9 +22,8 @@ Layout under ``index_dir``::
     bands/  (doc_id, band_id, band_key)   flat band join surface (every
                                           probe touches all bands)
 
-``hash="md5"`` stores portable string shingles/band keys (oracle-
-checkable); ``hash="xxhash64"`` stores int64 verification sets and
-8-byte band keys — 10-20× smaller index rows for the 100 TB path.
+Shingles and band keys are stored as the portable strings the md5
+signature family produces, so every index artifact is oracle-checkable.
 
 Probe output is proven equal to the inline union pipeline
 (``tests/test_llm_ops.py::test_probe_index_equals_inline_cross_corpus``):
@@ -55,27 +54,26 @@ from datapipe_spark.operators.dedup import (
 # it keys the /tmp build-once cache, so a stale pre-change index can
 # never be probed by post-change code (a layout change without a bump
 # produced silently-wrong appends once — mixed partitioned/flat bands)
-_INDEX_FORMAT_VERSION = 3  # v3: meta.json sidecar replaced the meta/ parquet
+# v3: meta.json sidecar replaced the meta/ parquet; v4: md5 is the only
+# signature family (meta.json no longer records one)
+_INDEX_FORMAT_VERSION = 4
 
 
 def _p(index_dir: str, part: str) -> str:
     return index_dir.rstrip("/") + "/" + part
 
 
-def _part_ddl(part: str, hash: str) -> str:
-    """The declared schema of each part ``_write_parts`` writes: reads
-    pass it instead of inferring it (a Spark job per read). Shingles
-    and band keys are strings in md5 mode, int64 in xxhash64 mode."""
-    key = "string" if hash == "md5" else "bigint"
-    return {
-        "mem": "doc_id bigint, ghash string, rep_id bigint",
-        "sigs": f"doc_id bigint, sh array<{key}>, signature array<bigint>",
-        "bands": f"doc_id bigint, band_id int, band_key {key}",
-    }[part]
+# The declared schema of each part ``_write_parts`` writes: reads pass
+# it instead of inferring it (a Spark job per read).
+_PART_DDL = {
+    "mem": "doc_id bigint, ghash string, rep_id bigint",
+    "sigs": "doc_id bigint, sh array<string>, signature array<bigint>",
+    "bands": "doc_id bigint, band_id int, band_key string",
+}
 
 
-def _read_part(spark: SparkSession, index_dir: str, part: str, hash: str) -> DataFrame:
-    return spark.read.schema(_part_ddl(part, hash)).parquet(_p(index_dir, part))
+def _read_part(spark: SparkSession, index_dir: str, part: str) -> DataFrame:
+    return spark.read.schema(_PART_DDL[part]).parquet(_p(index_dir, part))
 
 
 def _write_parts(
@@ -104,10 +102,8 @@ def _write_parts(
     # by band_id prunes nothing and multiplies files 8×; the 100 TB
     # layout win is bucketing by band_key (co-located probe join), which
     # a lakehouse table format would declare on this same column.
-    # band_key keeps its mode-native type — string for md5, int64 for
-    # xxhash64 (the 8-byte key IS that mode's size/shuffle win)
     def _bands() -> None:
-        band_rows(sigs, hash=_meta_hash_of(sigs)).write.mode(mode).parquet(
+        band_rows(sigs).write.mode(mode).parquet(
             _p(index_dir, "bands")
         )
 
@@ -165,14 +161,7 @@ _commit_journal = journal.commit
 _roll_forward = journal.roll_forward
 
 
-def _meta_hash_of(sigs: DataFrame) -> str:
-    # xxhash64 verification sets are int64; md5 keeps raw shingle strings
-    return "md5" if dict(sigs.dtypes)["_sh"] == "array<string>" else "xxhash64"
-
-
-def build_minhash_index(
-    spark: SparkSession, docs: DataFrame, index_dir: str, hash: str = "md5"
-) -> dict:
+def build_minhash_index(spark: SparkSession, docs: DataFrame, index_dir: str) -> dict:
     """Build the corpus band index from ``(doc_id, text)`` rows.
 
     One linear pass: verbatim-copy collapse (membership), sign the
@@ -191,22 +180,10 @@ def build_minhash_index(
     journal.reset(index_dir)
     mem = _collapse_exact(docs.select("doc_id", "text")).persist()
     reps = _rep_docs(docs, mem)
-    sigs = (
-        minhash_signatures(reps, hash=hash)
-        .select(
-            "doc_id",
-            (
-                F.col("_sh")
-                if hash == "md5"
-                else F.expr("transform(_sh, s -> xxhash64(s))")
-            ).alias("_sh"),
-            "signature",
-        )
-        .persist()
-    )
+    sigs = minhash_signatures(reps).select("doc_id", "_sh", "signature").persist()
     _write_parts(mem, sigs, index_dir, "overwrite")
     n_docs, n_reps = mem.count(), sigs.count()
-    _write_meta(index_dir, {"hash": hash, "n_docs": n_docs, "n_reps": n_reps})
+    _write_meta(index_dir, {"n_docs": n_docs, "n_reps": n_reps})
     mem.unpersist()
     sigs.unpersist()
     return {"n_docs": n_docs, "n_reps": n_reps, "index_dir": index_dir}
@@ -289,7 +266,6 @@ def append_minhash_index(
     if batch_id is not None and journal.watermark(index_dir) >= batch_id:
         return False
     meta = _meta(spark, index_dir)
-    h = meta["hash"]
     if precollapsed is None:
         bm = _collapse_exact(new_docs.select("doc_id", "text")).localCheckpoint(
             eager=True
@@ -300,7 +276,7 @@ def append_minhash_index(
     # scan so the index side is a map-only probe (never shuffled on
     # ghash — per-batch cost tracks the batch, not the corpus)
     existing = (
-        _read_part(spark, index_dir, "mem", h)
+        _read_part(spark, index_dir, "mem")
         .join(F.broadcast(bm.select("ghash").distinct()), "ghash")
         .groupBy("ghash")
         .agg(F.min("rep_id").alias("_old_rep"))
@@ -324,14 +300,8 @@ def append_minhash_index(
     ).select("doc_id")
     if precollapsed is None:
         # standalone path signs ONLY the new-content docs
-        rep_sigs = minhash_signatures(new_docs.join(new_reps, "doc_id"), hash=h).select(
-            "doc_id",
-            (
-                F.col("_sh")
-                if h == "md5"
-                else F.expr("transform(_sh, s -> xxhash64(s))")
-            ).alias("_sh"),
-            "signature",
+        rep_sigs = minhash_signatures(new_docs.join(new_reps, "doc_id")).select(
+            "doc_id", "_sh", "signature"
         )
     else:
         # probe-then-append path reuses the probe's already-signed reps
@@ -361,7 +331,6 @@ def append_minhash_index(
         def _new_meta() -> dict:
             nm = {
                 **meta,
-                "hash": h,
                 "n_docs": meta["n_docs"] + nd_f.result(),
                 "n_reps": meta["n_reps"] + nr_f.result(),
             }
@@ -561,28 +530,18 @@ def _probe_plan(
     split out so plan-shape tests can inspect the joins before the
     eager checkpoint hides them."""
     _roll_forward(index_dir)  # complete any crashed append first
-    meta = _meta(spark, index_dir)
-    h = meta["hash"]
     bmem = _collapse_exact(batch_docs.select("doc_id", "text")).persist()
     bsigs = (
-        minhash_signatures(_rep_docs(batch_docs, bmem), hash=h)
-        .select(
-            "doc_id",
-            (
-                F.col("_sh")
-                if h == "md5"
-                else F.expr("transform(_sh, s -> xxhash64(s))")
-            ).alias("sh"),
-            "signature",
-        )
+        minhash_signatures(_rep_docs(batch_docs, bmem))
+        .select("doc_id", F.col("_sh").alias("sh"), "signature")
         .persist()
     )
-    bbands = band_rows(bsigs.select("doc_id", "signature"), hash=h)
+    bbands = band_rows(bsigs.select("doc_id", "signature"))
 
     # batch side broadcast into EVERY index join: the index tables are
     # the big side by definition and must only ever be map-side probed —
     # no shuffle of bands/sigs/mem, per-probe cost ∝ batch + matches
-    ibands = _read_part(spark, index_dir, "bands", h)
+    ibands = _read_part(spark, index_dir, "bands")
     cand = (
         F.broadcast(bbands)
         .join(
@@ -597,7 +556,7 @@ def _probe_plan(
         .dropDuplicates(["batch_rep", "corpus_rep"])
     )
 
-    isigs = _read_part(spark, index_dir, "sigs", h).select(
+    isigs = _read_part(spark, index_dir, "sigs").select(
         F.col("doc_id").alias("corpus_rep"), F.col("sh").alias("sh_c")
     )
     verified = (
@@ -618,7 +577,7 @@ def _probe_plan(
         "batch_rep", "corpus_rep", jac.alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
 
-    imem = _read_part(spark, index_dir, "mem", h).select(
+    imem = _read_part(spark, index_dir, "mem").select(
         F.col("rep_id").alias("corpus_rep"), F.col("doc_id").alias("corpus_doc_id")
     )
     bmembers = bmem.select(
@@ -707,8 +666,7 @@ def _purge_rewrite_plans(
     (map-only pass, no shuffle of the index bulk); above the gate the
     same plans fall back to shuffle joins."""
     tb = F.broadcast(trans) if gated else trans
-    h = _meta(spark, index_dir)["hash"]
-    mem = _read_part(spark, index_dir, "mem", h)
+    mem = _read_part(spark, index_dir, "mem")
     # mem/: drop purged rows, re-point affected groups at the new rep
     mem_out = (
         mem.join(probe, "doc_id", "left_anti")
@@ -723,7 +681,7 @@ def _purge_rewrite_plans(
     rmap = tb.select("old_rep", "new_rep")
 
     def _rekey(part: str, cols: list[str]) -> DataFrame:
-        t = _read_part(spark, index_dir, part, h).join(
+        t = _read_part(spark, index_dir, part).join(
             rmap, F.col("doc_id") == F.col("old_rep"), "left"
         )
         return t.filter(
@@ -770,8 +728,8 @@ def purge_minhash_index(
     O(closed) argument as ``scd2_purge_keys`` — and deployments batch
     erasure requests to amortize it. bands/ comes out range-clustered
     on ``band_key`` again (the ``compact_minhash_index`` layout), so
-    probe pruning survives the purge. The watermark and hash mode are
-    untouched; purging is not an append.
+    probe pruning survives the purge. The watermark is untouched;
+    purging is not an append.
 
     Returns ``{"purged_docs", "dropped_reps", "renamed_reps"}``.
     """
@@ -797,7 +755,7 @@ def purge_minhash_index(
     gated = n_purge <= tombstones.BACKLOG_BROADCAST_MAX_ROWS
     probe = F.broadcast(kb) if gated else kb
 
-    mem = _read_part(spark, index_dir, "mem", meta["hash"])
+    mem = _read_part(spark, index_dir, "mem")
     # ONE index-scan probe join yields everything O(purged): the hit
     # rows (meta delta) and the affected groups (rep translation)
     hits = mem.join(probe, "doc_id").localCheckpoint(eager=True)

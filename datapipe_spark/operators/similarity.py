@@ -269,6 +269,18 @@ def topk_ivf(
     return materialize_and_release(out, e, q)
 
 
+# The declared schemas of the two parts ``build_ivf_index`` writes:
+# reads pass them instead of inferring them (a Spark job per read).
+# ``_CELL_FILE_DDL`` is one ``qcell=`` partition's file schema.
+_CENTROIDS_DDL = "cell int, centroid array<double>"
+_CELL_FILE_DDL = "vec_id bigint, v array<double>"
+_CELLS_DDL = _CELL_FILE_DDL + ", qcell int"
+
+
+def _read_cells(spark: SparkSession, cells: str) -> DataFrame:
+    return spark.read.schema(_CELLS_DDL).parquet(cells)
+
+
 def build_ivf_index(
     spark: SparkSession, sf_dir: str, index_dir: str, nlist: int | None = None
 ) -> dict:
@@ -314,9 +326,9 @@ def build_ivf_index(
         index_dir.rstrip("/") + "/cells"
     )
     cent_rows = [(i, [float(v) for v in cmat[i]]) for i in range(len(cmat))]
-    spark.createDataFrame(cent_rows, "cell int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(index_dir.rstrip("/") + "/centroids")
+    spark.createDataFrame(cent_rows, _CENTROIDS_DDL).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(index_dir.rstrip("/") + "/centroids")
     e.unpersist()
     return {"nlist": nlist, "n_vecs": n_vecs, "index_dir": index_dir}
 
@@ -339,7 +351,7 @@ def _cell_assignments(e: DataFrame, cmat) -> DataFrame:
             best = np.argmax(x @ cm.T, axis=1).astype(np.int32)
             yield pdf.assign(qcell=best)
 
-    return e.mapInPandas(assign, "vec_id long, v array<double>, qcell int")
+    return e.mapInPandas(assign, _CELLS_DDL)
 
 
 def _load_centroids(spark: SparkSession, index_dir: str):
@@ -348,7 +360,9 @@ def _load_centroids(spark: SparkSession, index_dir: str):
     import numpy as np
 
     cent = sorted(
-        spark.read.parquet(index_dir.rstrip("/") + "/centroids").collect(),
+        spark.read.schema(_CENTROIDS_DDL)
+        .parquet(index_dir.rstrip("/") + "/centroids")
+        .collect(),
         key=lambda r: r["cell"],
     )
     return np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cent])
@@ -489,7 +503,7 @@ def topk_ivf_index(
     probes = spark.createDataFrame(
         probe_rows, "query_id long, qcell int, qv array<double>"
     )
-    idx = spark.read.parquet(index_dir.rstrip("/") + "/cells").filter(
+    idx = _read_cells(spark, index_dir.rstrip("/") + "/cells").filter(
         F.col("qcell").isin(sorted({int(c) for row in order for c in row}))
     )
     # merge-on-read erasure: queued vec_ids leave the scan BEFORE
@@ -1610,9 +1624,9 @@ def purge_ivf_index(
         F.broadcast(kb) if n_purge <= tombstones.BACKLOG_BROADCAST_MAX_ROWS else kb
     )
 
-    cdf = spark.read.parquet(cells)
     hits = (
-        cdf.select("vec_id", "qcell")
+        _read_cells(spark, cells)
+        .select("vec_id", "qcell")
         .join(probe, "vec_id")
         .groupBy("qcell")
         .count()
@@ -1634,14 +1648,13 @@ def purge_ivf_index(
         .partitionBy("qcell")
         .parquet(os.path.join(stage, "cells"))
     )
+    from datapipe_spark.util import write_empty_parquet
+
     swaps = []
-    empty = None
     for c in touched:
         src = os.path.join(stage, f"cells/qcell={c}")
         if not os.path.isdir(src):  # cell emptied entirely by the purge
-            if empty is None:
-                empty = spark.createDataFrame([], "vec_id long, v array<double>")
-            empty.write.mode("overwrite").parquet(src)
+            write_empty_parquet(src, _CELL_FILE_DDL)
         swaps.append([src, f"{cells}/qcell={c}"])
     journal.commit(base, {"swaps": swaps, "deletes": tomb_files})
     _ivf_roll_forward(base, sweep=True)
@@ -1656,7 +1669,7 @@ def _ivf_purge_kept_plan(
     touched qcells (an erasure never reads untouched cells) and the
     backlog join must be a broadcast under the count gate."""
     return (
-        spark.read.parquet(cells)
+        _read_cells(spark, cells)
         .filter(F.col("qcell").isin(touched))
         .join(probe, "vec_id", "left_anti")
     )

@@ -30,7 +30,7 @@ Commit protocol (in this order — the pointer swap is the commit):
      task6-ecommerce-tables-config.yaml:51-61);
   3. write ``_meta/v{n}.json`` whose ``files`` list = parent manifest
      + the staged files (an O(increment) metadata operation);
-  4. atomically swap ``_LATEST`` (os.replace).
+  4. atomically swap ``_LATEST`` (fsynced os.replace, ``util.atomic_write_json``).
 
 A crash before step 4 leaves a PHANTOM version — staged data and/or
 metadata with no pointer — which every reader ignores:
@@ -57,10 +57,13 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+from datapipe_spark.util import atomic_write_json
 
 
 def _meta_dir(table_dir: str) -> str:
@@ -166,11 +169,9 @@ def _evolve_schema(parent, new):
 
 def _swap_pointer(table_dir: str, version: int) -> None:
     """THE commit: everything before this call is invisible staging
-    (kept separate so crash tests can sever exactly this step)."""
-    tmp = _pointer(table_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, _pointer(table_dir))
+    (kept separate so crash tests can sever exactly this step). The
+    JSON text of an int is the plain number ``current_version`` parses."""
+    atomic_write_json(_pointer(table_dir), version)
 
 
 def commit_snapshot(
@@ -289,10 +290,7 @@ def _commit_locked(
         # back as NULL, Iceberg's add-column semantics)
         "schema": json.loads(schema.json()),
     }
-    tmp = _meta_path(table_dir, version) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _meta_path(table_dir, version))
+    atomic_write_json(_meta_path(table_dir, version), meta)
     _swap_pointer(table_dir, version)
     return version
 
@@ -343,10 +341,7 @@ def tag_snapshot(
         _read_meta(table_dir, v)  # tagging an expired version: raise
         r = refs(table_dir)
         r[name] = v
-        tmp = _refs_path(table_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(r, f)
-        os.replace(tmp, _refs_path(table_dir))
+        atomic_write_json(_refs_path(table_dir), r)
         return v
 
 
@@ -357,10 +352,7 @@ def drop_tag(table_dir: str, name: str) -> None:
     with writer_lease(table_dir):
         r = refs(table_dir)
         r.pop(name, None)
-        tmp = _refs_path(table_dir) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(r, f)
-        os.replace(tmp, _refs_path(table_dir))
+        atomic_write_json(_refs_path(table_dir), r)
 
 
 def read_snapshot(
@@ -979,10 +971,7 @@ def overwrite_partitions(
             "files": kept + new_files,
             "schema": json.loads(schema.json()),
         }
-        tmp = _meta_path(table_dir, version) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, _meta_path(table_dir, version))
+        atomic_write_json(_meta_path(table_dir, version), meta)
         _swap_pointer(table_dir, version)
         return version
 
@@ -1153,14 +1142,15 @@ def _remove_orphans_locked(table_dir: str, older_than_s: float) -> list[str]:
         if not _walk_parquet(vdir, table_dir):
             shutil.rmtree(vdir, ignore_errors=True)
     # metadata debris: phantom-version metas (v<digits>.json with
-    # v > cur) and stale .tmp leftovers of interrupted atomic writes.
+    # v > cur) and stale ``.tmp`` / ``.tmp-<pid>`` leftovers of
+    # interrupted atomic writes.
     # Anything else in _meta/ (refs.json, committed metas) is LIVE
     # control state and must never be touched by the sweep.
     meta = _meta_dir(table_dir)
     if os.path.isdir(meta):
         for name in os.listdir(meta):
             mp = os.path.join(meta, name)
-            if name.endswith(".tmp"):
+            if re.search(r"\.tmp(-\d+)?$", name):
                 debris = True  # a completed write never leaves its tmp
             else:
                 stem = name.split(".")[0]

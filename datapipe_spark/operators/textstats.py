@@ -358,34 +358,29 @@ LEFT JOIN pred p ON d.doc_id = p.doc_id AND p.rk = 1
 
 
 def winnow_fingerprints(
-    spark: SparkSession, sf_dir: str, k: int = 5, window: int = 4, hash: str = "md5"
+    spark: SparkSession, sf_dir: str, k: int = 5, window: int = 4
 ) -> DataFrame:
     """Document fingerprinting via winnowing (hashed k-grams,
     per-window minimum selection — the MOSS algorithm).
 
-    ``hash="md5"`` (default) makes the whole operator engine-portable:
-    md5 hex digests are identical across engines and window-min is
-    lexicographic, so the fingerprint sets are DuckDB-oracle-checkable
-    value for value (``WINNOW_FINGERPRINTS_SQL``). ``hash="xxhash64"``
-    is the cheaper 64-bit variant for the 100 TB path (≈2× less hash
-    CPU, 8-byte prints), engine-specific by nature.
+    md5 makes the whole operator engine-portable: md5 hex digests are
+    identical across engines and window-min is lexicographic, so the
+    fingerprint sets are DuckDB-oracle-checkable value for value
+    (``WINNOW_FINGERPRINTS_SQL``).
 
-    JVM-side either way: k-gram hashing and window-min selection are
+    JVM-side: k-gram hashing and window-min selection are
     per-document array expressions — no shuffle, no Python. Output
     carries the fingerprint set sorted and comma-joined (a scalar
     column, driver-canonicalization-safe) plus its size.
     """
     d = load_table(spark, sf_dir, "documents")
-    if hash not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash family {hash!r}; use 'md5' or 'xxhash64'")
-    gram_fn = hash
     # _w materialized as a column first: split(text) INSIDE the lambda
     # would re-split the document once per gram — O(words²) string
     # work per doc, a real hazard at book-length documents (the same
     # pattern substring_dup_spans eliminated in r5)
     grams = F.expr(
         f"transform(sequence(1, greatest(size(_w)-{k}+1, 1)), "
-        f"i -> {gram_fn}(concat_ws(' ', slice(_w, i, {k}))))"
+        f"i -> md5(concat_ws(' ', slice(_w, i, {k}))))"
     )
     wins = F.expr(
         f"transform(sequence(1, greatest(size(_grams)-{window}+1, 1)), "
@@ -624,7 +619,7 @@ FEATURE_HASH_DIM = 64  # hashed BoW dims (matches the embeddings table)
 
 
 def featurize_documents(
-    spark: SparkSession, sf_dir: str, dim: int = FEATURE_HASH_DIM, hash: str = "md5"
+    spark: SparkSession, sf_dir: str, dim: int = FEATURE_HASH_DIM
 ) -> DataFrame:
     """Feature-hashed bag-of-words document vectors — the text →
     vector bridge that feeds the similarity/ANN stack when no neural
@@ -638,9 +633,8 @@ def featurize_documents(
     ``array<float>`` the ANN operators consume. Scale shape: explode →
     one map-side-combined (doc, dim) aggregate → per-doc norm join;
     no windows, no driver state, shuffles carry (id, dim, count) rows
-    only. ``hash="md5"`` is the portable oracle family;
-    ``hash="xxhash64"`` the cheap 100 TB path (same contract as every
-    dedup operator).
+    only. Tokens hash through the dedup operators' portable md5 parse
+    (``dedup._hash_expr``), so the vectors are oracle-checkable.
     """
     from datapipe_spark.operators.dedup import _hash_expr
 
@@ -648,7 +642,7 @@ def featurize_documents(
     toks = d.select(
         "doc_id", F.explode(F.split("text", " ")).alias("tok")
     ).filter(F.col("tok") != "")  # '' is not a feature (r12 review)
-    h = F.expr(_hash_expr("tok", hash))
+    h = F.expr(_hash_expr("tok"))
     # bucket from the low bits, sign from an independent high bit
     # (bit 58 — inside the 60-bit md5 parse, positive under both
     # engines' arithmetic)
@@ -1479,11 +1473,10 @@ def _bpe_merges_for(spark: SparkSession, sf_dir: str, n_merges: int) -> list:
             {k: r[k] for k in ("rank", "left", "right", "merged", "freq")}
             for r in bpe_train_merges(spark, sf_dir, n_merges).orderBy("rank").collect()
         ]
+        from datapipe_spark.util import atomic_write_json
+
         os.makedirs(root, exist_ok=True)
-        tmp = os.path.join(root, f"merges-{h}.tmp-{os.getpid()}")
-        with open(tmp, "w") as f:
-            json.dump(merges, f)
-        os.replace(tmp, path)
+        atomic_write_json(path, merges)
     _BPE_MERGE_CACHE[key] = merges
     return merges
 

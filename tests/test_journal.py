@@ -172,7 +172,7 @@ def test_watermark_reads_pending_journal_meta_first(tmp_path):
     journal.commit(d, {"moves": []})
     assert journal.watermark(d) == 4
     journal.roll_forward(d)
-    _write(f"{d}/meta.json", json.dumps({"hash": "md5"}))
+    _write(f"{d}/meta.json", json.dumps({"n_docs": 0, "n_reps": 0}))
     assert journal.watermark(d) == -1  # nothing recorded yet
 
 

@@ -997,115 +997,6 @@ def test_lsh_megacluster_bounded_candidates(spark):
         mem.unpersist()
 
 
-def test_minhash_xxhash64_scale_path_agrees_with_md5(spark, sf_dir):
-    """The xxhash64 branch is the documented 100 TB path; keep it
-    exercised. Verified outputs must agree with the portable md5
-    branch: banding recall differs only for borderline pairs, and the
-    sf0.01 planted near-dups (j≥0.95) are certain candidates under
-    both hash families, so the verified (exact-jaccard) pair sets and
-    values must be identical."""
-    md5_pairs = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.minhash_dedup(spark, sf_dir, hash="md5").collect()
-    }
-    xx_pairs = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in dedup.minhash_dedup(spark, sf_dir, hash="xxhash64").collect()
-    }
-    assert md5_pairs.keys() == xx_pairs.keys()
-    assert all(abs(md5_pairs[k] - xx_pairs[k]) < 1e-9 for k in md5_pairs)
-
-
-def test_simhash_xxhash64_packing_and_recall(spark, sf_dir):
-    """64-bit simhash packing (incl. the sign bit) must round-trip:
-    verbatim copies hash identically (hamming 0), bit 63 is actually
-    exercised (some simhash is negative), and the planted near-dup
-    pairs from the exact-jaccard truth are recovered like the md5
-    variant's recall test."""
-    docs = _crafted_corpus(spark, 50)
-    sh = dedup.simhash_dedup_frame(docs, hash="xxhash64")
-    within = sh.filter((F.col("doc_a") < 50) & (F.col("doc_b") < 50))
-    assert within.filter(F.col("hamming") == 0).count() == 50 * 49 // 2
-
-    truth = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.ngram_jaccard_pairs(spark, sf_dir).collect()
-        if r["jaccard"] >= 0.9
-    }
-    assert truth
-    found = {
-        (r["doc_a"], r["doc_b"])
-        for r in dedup.simhash_dedup(spark, sf_dir, hash="xxhash64").collect()
-    }
-    recall = len(truth & found) / len(truth)
-    assert recall >= 0.8, f"xxhash64 simhash recall {recall:.2f} on j>=0.9 truth"
-
-    from datapipe_spark.operators.dedup import _collapse_exact, minhash_signatures
-
-    # sign-bit check on the packed 64-bit value: with ~uniform bit
-    # votes some document must set bit 63 (negative long)
-    from datapipe_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    mem = _collapse_exact(d)
-    reps = d.join(mem.filter(F.col("doc_id") == F.col("rep_id")).select("doc_id"), "doc_id")
-    n_bits = 64
-    base = "xxhash64(tok)"
-    toks = (
-        reps.withColumn("_sh", dedup._shingles())
-        .select("doc_id", F.explode("_sh").alias("tok"))
-        .select("doc_id", F.expr(base).alias("h"))
-    )
-    assert toks.filter(F.col("h") < 0).count() > 0  # raw hashes span the sign bit
-
-
-def test_substring_spans_xxhash64_scale_path(spark, sf_dir):
-    """The xxhash64 gram family is the documented 100 TB path for span
-    dedup. Because the operator's output is span POSITIONS (grams are
-    internal join keys only), the two hash families must produce
-    IDENTICAL results absent collisions (|grams|²/2⁶⁰ ≈ 0)."""
-    md5_rows = {
-        tuple(r) for r in dedup.substring_dup_spans(spark, sf_dir).collect()
-    }
-    xx_rows = {
-        tuple(r)
-        for r in dedup.substring_dup_spans(spark, sf_dir, hash="xxhash64").collect()
-    }
-    assert md5_rows == xx_rows
-
-
-def test_winnow_xxhash64_scale_path(spark, sf_dir):
-    """The 64-bit winnowing variant must produce non-empty fingerprint
-    sets with the same per-doc cardinality shape as md5 (window-min
-    over a different hash family: counts can differ slightly, but
-    every doc keeps >=1 fingerprint and near-dups still overlap)."""
-    xx = {
-        r["doc_id"]: set(r["fingerprints"].split(","))
-        for r in textstats.winnow_fingerprints(spark, sf_dir, hash="xxhash64").collect()
-    }
-    assert xx and all(len(v) >= 1 for v in xx.values())
-    truth = dedup.ngram_jaccard_pairs(spark, sf_dir).collect()
-    assert truth
-    for pair in truth:
-        a, b = xx[pair["doc_a"]], xx[pair["doc_b"]]
-        overlap = len(a & b) / max(len(a | b), 1)
-        assert overlap > 0.5, (pair, overlap)
-
-
-def test_minhash_signatures_xxhash64_shape(spark, sf_dir):
-    """xxhash64 signature arrays: 32 perms, all within [0, P)."""
-    from datapipe_spark.operators.dedup import _N_PERM, _P
-    from datapipe_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text").limit(50)
-    sigs = dedup.minhash_signatures(d, hash="xxhash64").select("signature").collect()
-    assert sigs
-    for r in sigs:
-        sig = r["signature"]
-        assert len(sig) == _N_PERM
-        assert all(0 <= v < _P for v in sig)
-
-
 def test_simhash_bucket_guard_subset_and_recall(spark, sf_dir):
     """The band-bucket width guard can only REMOVE candidate pairs
     (splits partition buckets), never invent them — and under forced
@@ -1288,7 +1179,7 @@ def test_simhash_arrow_fingerprints_equal_jvm_expression_form(spark):
         toks = (
             reps.withColumn("_sh", _shingles())
             .select("doc_id", F.explode("_sh").alias("tok"))
-            .select("doc_id", F.expr(_hash_expr("tok", "md5")).alias("h"))
+            .select("doc_id", F.expr(_hash_expr("tok")).alias("h"))
         )
         lane = 20
         groups = [
@@ -1468,8 +1359,8 @@ def test_tokenize_roundtrips_in_vocab_tokens(spark, sf_dir):
 
 def test_featurize_documents_norm_and_dup_invariance(spark, sf_dir):
     """Signed feature hashing invariants: every vector is unit-L2
-    (within 6-dp rounding), verbatim duplicates map to identical
-    vectors, and the xxhash64 scale family keeps the same contract."""
+    (within 6-dp rounding) and verbatim duplicates map to identical
+    vectors."""
     feats = textstats.featurize_documents(spark, sf_dir).collect()
     by_doc: dict[int, dict[int, float]] = {}
     for r in feats:
@@ -1485,11 +1376,6 @@ def test_featurize_documents_norm_and_dup_invariance(spark, sf_dir):
         a, b = by_doc[pair["doc_a"]], by_doc[pair["doc_b"]]
         cos = sum(a[d] * b.get(d, 0.0) for d in a)
         assert cos > 0.7, (pair, cos)
-    xx = textstats.featurize_documents(spark, sf_dir, hash="xxhash64").collect()
-    by_doc_xx: dict[int, float] = {}
-    for r in xx:
-        by_doc_xx[r["doc_id"]] = by_doc_xx.get(r["doc_id"], 0.0) + r["weight"] ** 2
-    assert by_doc_xx and all(abs(n - 1.0) < 1e-4 for n in by_doc_xx.values())
 
 
 def test_multimodal_frame_sample_oracle_and_consistency(spark, sf_dir):
@@ -1987,41 +1873,6 @@ def test_embedding_quantize_int8_roundtrip_properties(spark, sf_dir):
     assert all(r["mse"] <= bound for r in rows), max(r["mse"] for r in rows)
     assert all(r["mse"] >= 0 for r in rows)
     assert math.isfinite(sum(r["mse"] for r in rows))
-
-
-def test_minhash_index_xxhash_mode_matches_md5_pairs(spark, tmp_path):
-    """The engine-cheap xxhash64 index (int64 verification sets, 8-byte
-    band keys) must find the same pairs at the same jaccard as the
-    portable md5 index on a planted corpus/batch — mode only changes
-    bytes on disk, never semantics."""
-    from datapipe_spark.operators import dedup_index
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog today"),
-            (2, "pack my box with five dozen liquor jugs right now"),
-            (3, "completely unrelated text about distributed query engines"),
-        ],
-        ["doc_id", "text"],
-    )
-    batch = spark.createDataFrame(
-        [
-            (10, "the quick brown fox jumps over the lazy dog today"),  # verbatim
-            (11, "the quick brown fox jumps over the lazy dog tonight"),  # near
-            (12, "nothing like anything in the corpus at all here"),
-        ],
-        ["doc_id", "text"],
-    )
-    results = {}
-    for mode in ("md5", "xxhash64"):
-        idx = str(tmp_path / f"idx_{mode}")
-        dedup_index.build_minhash_index(spark, corpus, idx, hash=mode)
-        results[mode] = {
-            (r["new_doc_id"], r["corpus_doc_id"]): round(r["jaccard"], 9)
-            for r in dedup_index.probe_minhash_index(spark, idx, batch).collect()
-        }
-    assert results["md5"] == results["xxhash64"]
-    assert (10, 1) in results["md5"] and results["md5"][(10, 1)] == 1.0
 
 
 def test_minhash_index_empty_and_subshingle_batches(spark, tmp_path):
@@ -3377,6 +3228,54 @@ def test_probe_plan_build_submits_no_spark_job(spark, tmp_path):
     bmem.unpersist()
     bsigs.unpersist()
     assert tracker.getJobIdsForGroup(group) == []
+
+
+def test_ivf_index_reads_submit_no_schema_inference_job(spark, tmp_path):
+    """The IVF index reads centroids/ and cells/ under their declared
+    schemas: building the purge's survivor plan submits no Spark job,
+    and loading the quantizer runs only its own bounded collect."""
+    import os as _os
+    import uuid
+
+    from datapipe_spark.operators import similarity as sim
+
+    sf = str(tmp_path / "sf")
+    _os.makedirs(sf, exist_ok=True)
+    spark.range(40).select(
+        F.col("id").alias("vec_id"),
+        F.expr(
+            "transform(sequence(1, 8), "
+            "i -> cast(pmod(hash(id, i), 100) as double) / 100)"
+        ).alias("embedding"),
+    ).write.parquet(_os.path.join(sf, "embeddings.parquet"))
+    idx = str(tmp_path / "ivf")
+    sim.build_ivf_index(spark, sf, idx, nlist=5)
+    kb = spark.createDataFrame([(3,)], "vec_id long").localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_of(fn):
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    kept, n_jobs = jobs_of(
+        lambda: sim._ivf_purge_kept_plan(
+            spark, f"{idx}/cells", [0, 1], F.broadcast(kb)
+        )
+    )
+    assert n_jobs == 0
+    assert kept.schema.simpleString() == (
+        "struct<vec_id:bigint,v:array<double>,qcell:int>"
+    )
+    cmat, n_jobs = jobs_of(lambda: sim._load_centroids(spark, idx))
+    assert n_jobs == 1 and cmat.shape == (5, 8)
 
 
 def test_compact_minhash_index_pooled_jobs_keep_job_group(spark, tmp_path):

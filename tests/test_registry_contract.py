@@ -187,3 +187,21 @@ def test_package_reads_only_deployment_settings():
         for name in re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", p.read_text())
     }
     assert read == DEPLOYMENT_SETTINGS
+
+
+def test_no_function_takes_a_hash_family_option():
+    """The near-duplicate operators hash with one family (md5, the one
+    the DuckDB oracle replays); a ``hash`` parameter would reopen a
+    second, untested family."""
+    import ast
+
+    pkg = pathlib.Path(registry.__file__).resolve().parents[1]
+    found = []
+    for p in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = node.args
+                params = a.posonlyargs + a.args + a.kwonlyargs
+                if any(x.arg == "hash" for x in params):
+                    found.append(f"{p.relative_to(pkg)}:{node.lineno}")
+    assert found == []
