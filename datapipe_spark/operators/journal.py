@@ -1,6 +1,11 @@
-"""The journaled two-phase commit shared by every persisted store — the
-band index (``dedup_index``), the SCD2 dimension store (``scd2``) and
-the IVF index (``similarity``). Filesystem only: no Spark here.
+"""The journaled two-phase commit: the package's ONE way to replace a
+live directory. Every persisted store commits through it — the band
+index (``dedup_index``), the SCD2 dimension store (``scd2``) and the
+IVF index (``similarity``) — and so do the daily DAG's mart publish
+(``plans/dag.py``, one journal of four swaps) and the incremental
+increment (``plans/incremental.py``, the first-order state and every
+touched serving partition in one journal). Filesystem only: no Spark
+here.
 
 A writer entry:
 

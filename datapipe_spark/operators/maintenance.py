@@ -1,11 +1,22 @@
-"""Table maintenance: small-file compaction (SURVEY §4).
+"""Table maintenance: small-file compaction and layout rewrites
+(SURVEY §4).
 
 The reference targets 128 MB data files with auto-compaction via
 Iceberg table properties (``task6-ecommerce-tables-config.yaml:51-61``,
 batch design.md:193; requirements.md:41). Plain-parquet tables don't
-get that for free — this job is the stand-in for Iceberg's
-``rewrite_data_files``: rewrite each (optionally partitioned) table
-into ⌈bytes/target⌉ files, atomically (write beside, swap).
+get that for free — these are the stand-ins for Iceberg's
+``rewrite_data_files``: rewrite a table into ⌈bytes/target⌉ files
+(``compact_parquet_into``), range-clustered on one key
+(``cluster_parquet_into``) or z-ordered on several
+(``zorder_parquet_into``).
+
+Each function only WRITES the rewrite into ``out``; none of them
+replaces a live directory. A store that owns a commit journal (the
+SCD2 store, the band index, the IVF index) stages the rewrite under
+``journal.new_stage`` and commits it as a journaled swap, so a crash
+can never leave the live dir missing; the snapshot store's
+``rewrite_data_files`` is the in-place rewrite for tables with
+readers.
 
 Why it matters at 100 TB: streaming sinks and per-batch appends
 produce files sized by *trigger cadence*, not by optimal scan width;
@@ -24,37 +35,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024
-
-# staging suffixes the bare dir-swap rewrites below use; recover_swap
-# knows all of them
-_SWAP_SUFFIXES = ("__compacting", "__clustering", "__zordering")
-
-
-def recover_swap(path: str, sweep: bool = False) -> bool:
-    """Heal a crashed ``compact_parquet``/``cluster_parquet``/
-    ``zorder_parquet`` directory swap (the scd2 r9 compaction advisory
-    generalized to every bare-swap site): the swap's only
-    non-recoverable-looking crash state is "live dir renamed to
-    ``__old``, rewritten dir not yet renamed in" — restore ``__old``
-    so readers see the pre-rewrite content (the rewrite is
-    content-preserving by contract, so either generation is correct)
-    instead of a missing-path error.
-
-    ``sweep=True`` (WRITER entries only — the next maintenance run)
-    additionally deletes leftover ``__compacting``/``__clustering``/
-    ``__zordering``/``__old`` debris. Readers must not sweep: a live
-    rewrite's staging dir looks exactly like debris (the same
-    reader-vs-writer rule as the journaled stores). Returns True if a
-    restore happened."""
-    restored = False
-    old = path.rstrip("/") + "__old"
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-        restored = True
-    if sweep:
-        for suffix in (*_SWAP_SUFFIXES, "__old"):
-            shutil.rmtree(path.rstrip("/") + suffix, ignore_errors=True)
-    return restored
 
 
 def table_bytes(path: str) -> int:
@@ -77,13 +57,11 @@ def compact_parquet_into(
     target_bytes: int = TARGET_FILE_BYTES,
     partition_cols: list[str] | None = None,
 ) -> None:
-    """The rewrite half of ``compact_parquet``, decoupled from the
-    swap: write the ⌈size/target⌉-file rewrite of ``path`` into
-    ``out`` and stop. Callers that own a commit journal (the SCD2
-    store, the band index) stage the rewrite under their hidden
-    staging dir and commit it as a journaled swap instead of
-    the bare rename pair — a crash can then never leave the live dir
-    missing (r9 advisory on ``scd2_compact_closed``)."""
+    """Write the ⌈size/target⌉-file rewrite of ``path`` into ``out``.
+
+    Partitioned tables keep their layout (each partition is rewritten
+    through a repartition on the partition key so one task owns one
+    partition's output)."""
     df = spark.read.parquet(path)
     n_files = max(1, math.ceil(table_bytes(path) / target_bytes))
     shutil.rmtree(out, ignore_errors=True)
@@ -92,29 +70,6 @@ def compact_parquet_into(
         writer.write.mode("overwrite").partitionBy(*partition_cols).parquet(out)
     else:
         writer.write.mode("overwrite").parquet(out)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_bytes: int = TARGET_FILE_BYTES,
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Rewrite ``path`` into ⌈size/target⌉ files; returns new file count.
-
-    Partitioned tables keep their layout (each partition is rewritten
-    through a repartition on the partition key so one task owns one
-    partition's output). The swap is atomic at the directory level:
-    readers either see the old or the new table, never a mix.
-    """
-    recover_swap(path, sweep=True)
-    tmp = path.rstrip("/") + "__compacting"
-    compact_parquet_into(spark, path, tmp, target_bytes, partition_cols)
-    old = path.rstrip("/") + "__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return parquet_file_count(path)
 
 
 def cluster_parquet_into(
@@ -126,8 +81,24 @@ def cluster_parquet_into(
     schema: str | None = None,
     transform=None,
 ) -> None:
-    """The rewrite half of ``cluster_parquet`` without the swap (see
-    ``compact_parquet_into`` for why journaled callers need it).
+    """Range-cluster rewrite of ``path`` into ``out`` — the sort-order
+    half of Iceberg's ``rewrite_data_files`` (reference table config's
+    sorted write expectation; batch design.md:193): rows are
+    range-partitioned on ``cluster_cols`` (one contiguous key slice
+    per output file) and sorted within each file, so every file's
+    footer min/max covers a narrow slice of the key space.
+
+    Why it matters at 100 TB: parquet scans prune at two levels —
+    Spark skips whole FILES whose footer stats miss the predicate, and
+    row groups within a file the same way. On an unclustered table
+    every file spans the full key range (min/max ≈ global min/max) and
+    a selective predicate still reads every footer's data; after
+    clustering, a 1 %-selectivity range predicate touches ~1 % of
+    files. The rewrite itself is one range shuffle (sampled range
+    boundaries keep output files near-equal-sized even under key skew)
+    plus a per-partition sort that spills — no single-task sort
+    anywhere.
+
     ``schema``: optional explicit DDL — a schema-evolved table must be
     read under its full schema (a footer-sampled read silently drops
     columns the sampled file predates). ``transform``: optional
@@ -150,50 +121,16 @@ def cluster_parquet_into(
     )
 
 
-def cluster_parquet(
+def zorder_parquet_into(
     spark: SparkSession,
     path: str,
-    cluster_cols: list[str],
-    target_bytes: int = TARGET_FILE_BYTES,
-) -> int:
-    """Range-cluster rewrite — the sort-order half of Iceberg's
-    ``rewrite_data_files`` (reference table config's sorted write
-    expectation; batch design.md:193): rows are range-partitioned on
-    ``cluster_cols`` (one contiguous key slice per output file) and
-    sorted within each file, so every file's footer min/max covers a
-    narrow slice of the key space. Returns the new file count.
-
-    Why it matters at 100 TB: parquet scans prune at two levels —
-    Spark skips whole FILES whose footer stats miss the predicate, and
-    row groups within a file the same way. On an unclustered table
-    every file spans the full key range (min/max ≈ global min/max) and
-    a selective predicate still reads every footer's data; after
-    clustering, a 1 %-selectivity range predicate touches ~1 % of
-    files. The rewrite itself is one range shuffle (sampled range
-    boundaries keep output files near-equal-sized even under key skew)
-    plus a per-partition sort that spills — no single-task sort
-    anywhere. The swap is the same atomic directory swap as
-    ``compact_parquet``.
-    """
-    recover_swap(path, sweep=True)
-    tmp = path.rstrip("/") + "__clustering"
-    cluster_parquet_into(spark, path, tmp, cluster_cols, target_bytes)
-    old = path.rstrip("/") + "__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return parquet_file_count(path)
-
-
-def zorder_parquet(
-    spark: SparkSession,
-    path: str,
+    out: str,
     cluster_cols: list[str],
     target_bytes: int = TARGET_FILE_BYTES,
     bits_per_dim: int = 8,
-) -> int:
+) -> None:
     """Multi-dimensional cluster rewrite (z-order / Morton layout) —
-    what ``cluster_parquet`` cannot give: after a single-column range
+    what ``cluster_parquet_into`` cannot give: after a single-column range
     cluster, predicates on any OTHER column still touch every file.
     Z-order interleaves the bits of per-column quantile ranks so file
     footers stay selective for range predicates on EACH clustered
@@ -206,8 +143,8 @@ def zorder_parquet(
     ``np.searchsorted`` binary search per dimension plus integer bit
     math, guide §4.2's batch-native sweet spot. The layout write is
     the same sampled range shuffle + per-file sort as
-    ``cluster_parquet``. No window over the whole table, no
-    single-task sort. Returns the new file count.
+    ``cluster_parquet_into``. No window over the whole table, no
+    single-task sort. Writes the rewrite of ``path`` into ``out``.
 
     Implementation history (r13 measurement, 600k rows / 2 dims):
     the original ``F.aggregate`` higher-order lambda cost 44 s/pass
@@ -221,7 +158,6 @@ def zorder_parquet(
     exactly; equality checked over the full table when the swap
     landed).
     """
-    recover_swap(path, sweep=True)
     df = spark.read.parquet(path)
     nq = (1 << bits_per_dim) - 1
     probs = [j / (nq + 1) for j in range(1, nq + 1)]
@@ -276,22 +212,17 @@ def zorder_parquet(
     # per pass at sf0.1's 600k rows, and O(table) at scale)
     withz = df.select("*", *qcols).mapInPandas(_z_batches, out_schema).persist()
     n_files = max(1, math.ceil(table_bytes(path) / target_bytes))
-    tmp = path.rstrip("/") + "__zordering"
+    shutil.rmtree(out, ignore_errors=True)
     try:
         (
             withz.repartitionByRange(n_files, "_z")
             .sortWithinPartitions("_z")
             .drop("_z")
             .write.mode("overwrite")
-            .parquet(tmp)
+            .parquet(out)
         )
     finally:
         withz.unpersist()
-    old = path.rstrip("/") + "__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return parquet_file_count(path)
 
 
 def file_column_ranges(path: str, column: str) -> list[tuple[str, object, object]]:
@@ -318,50 +249,3 @@ def file_column_ranges(path: str, column: str) -> list[tuple[str, object, object
                 out.append((fp, min(mins), max(maxs)))
     return out
 
-
-def write_train_shards(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    n_shards: int | None = None,
-    epoch: int = 0,
-) -> dict:
-    """Materialize ``decontam.corpus_train_shards`` as the physical
-    serving layout a training job reads: one ``shard_id=*/`` hive
-    partition per shard, rows inside each file in loader order (pos
-    ascending), text included. A loader streams a shard front-to-back
-    for the deterministic pseudo-random sample order, and seeks
-    mid-shard with ``token_offset`` — no shuffle at read time, ever.
-
-    Write path: the manifest's ONE hash exchange, then
-    ``repartition(shard_id)`` + ``sortWithinPartitions(shard_id, pos)``
-    so each output file is pos-sorted even when two shards hash to one
-    write task (verified against parquet row order in tests). Returns
-    ``{"n_shards", "n_docs", "out_dir"}``.
-
-    ``epoch`` selects which epoch's permutation to materialize (the
-    manifest's salted order key) — normally a loader just regenerates
-    the MANIFEST per epoch and reorders reads over epoch 0's physical
-    layout, but a sequential-I/O-only consumer can rewrite the layout
-    per epoch with this.
-    """
-    from datapipe_spark.operators.decontam import TRAIN_SHARDS, corpus_train_shards
-    from datapipe_spark.sources.tables import load_table
-
-    n = n_shards or TRAIN_SHARDS
-    manifest = corpus_train_shards(spark, sf_dir, n_shards=n, epoch=epoch)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = out_dir.rstrip("/") + "__staging"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        manifest.join(docs, "doc_id")
-        .repartition("shard_id")
-        .sortWithinPartitions("shard_id", "pos")
-        .write.mode("overwrite")
-        .partitionBy("shard_id")
-        .parquet(tmp)
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.rename(tmp, out_dir)
-    n_docs = spark.read.parquet(out_dir).count()
-    return {"n_shards": n, "n_docs": n_docs, "out_dir": out_dir}

@@ -301,19 +301,13 @@ def build_ivf_index(
     rest. Returns ``{"nlist", "n_vecs", "index_dir"}``.
     """
     import math
-    import shutil
-
-    import numpy as np
 
     # rebuild-in-place clears prior store state first (r12 review, the
     # build_minhash_index posture): a stale commit journal would roll
-    # the OLD quantizer's staged qcell dirs into the fresh index, a
+    # the OLD quantizer's staged qcell dirs into the fresh index, and a
     # leftover tombstone queue would hide rebuilt vectors from every
-    # probe, and a crashed bare swap's cells__old would be resurrected
-    # over the new cells
-    base = index_dir.rstrip("/")
-    journal.reset(base)
-    shutil.rmtree(base + "/cells__old", ignore_errors=True)
+    # probe
+    journal.reset(index_dir.rstrip("/"))
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
@@ -354,18 +348,20 @@ def _cell_assignments(e: DataFrame, cmat) -> DataFrame:
     return e.mapInPandas(assign, _CELLS_DDL)
 
 
-def _load_centroids(spark: SparkSession, index_dir: str):
-    """The persisted O(nlist × dim) quantizer matrix (bounded driver
-    collect), row i = cell i."""
+def _load_centroids(index_dir: str):
+    """The persisted O(nlist × dim) quantizer matrix, row i = cell i:
+    read on the driver with pyarrow under ``_CENTROIDS_DDL`` (the file
+    is small; a Spark read would submit a collect job per probe)."""
     import numpy as np
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
 
-    cent = sorted(
-        spark.read.schema(_CENTROIDS_DDL)
-        .parquet(index_dir.rstrip("/") + "/centroids")
-        .collect(),
-        key=lambda r: r["cell"],
-    )
-    return np.stack([np.asarray(r["centroid"], dtype=np.float64) for r in cent])
+    cent = pq.read_table(
+        index_dir.rstrip("/") + "/centroids",
+        schema=to_arrow_schema(_parse_datatype_string(_CENTROIDS_DDL)),
+    ).sort_by("cell")
+    return np.array(cent.column("centroid").to_pylist(), dtype=np.float64)
 
 
 @guards_writer
@@ -374,18 +370,9 @@ def append_ivf_index(spark: SparkSession, index_dir: str, new_vecs: DataFrame) -
     ``(vec_id, v)`` rows are assigned with the FROZEN persisted
     quantizer (no retrain, no rescan) and appended to their ``qcell=``
     partitions only. Faiss add() semantics; when drift accumulates,
-    re-training is an explicit ``build_ivf_index`` rewrite — the same
-    maintenance posture as ``cluster_parquet``."""
-    from datapipe_spark.operators.maintenance import recover_swap
-
+    re-training is an explicit ``build_ivf_index`` rewrite."""
     _ivf_roll_forward(index_dir, sweep=True)  # writer entry
-    # heal a pre-r12 crashed compaction swap BEFORE appending (r12
-    # review, high): without this, mode('append') would CREATE a fresh
-    # cells/ holding only the batch, recover_swap would then never
-    # restore cells__old, and the next maintenance pass would rmtree
-    # the entire pre-crash index
-    recover_swap(index_dir.rstrip("/") + "/cells")
-    cmat = _load_centroids(spark, index_dir)
+    cmat = _load_centroids(index_dir)
     _cell_assignments(new_vecs.select("vec_id", "v"), cmat).write.mode(
         "append"
     ).partitionBy("qcell").parquet(index_dir.rstrip("/") + "/cells")
@@ -405,29 +392,25 @@ def compact_ivf_index(
     pruning that makes probes read only nprobe cells — re-asserted by
     the probe plan gate after compaction in tests). ``centroids/`` is
     never touched: the frozen quantizer IS the index contract.
-    Content-preserving atomic dir swap; returns (files_before,
+    Content-preserving journaled dir swap; returns (files_before,
     files_after)."""
     from datapipe_spark.operators.maintenance import (
         TARGET_FILE_BYTES,
         compact_parquet_into,
         parquet_file_count,
-        recover_swap,
     )
 
     _ivf_roll_forward(index_dir, sweep=True)  # writer entry
     base = index_dir.rstrip("/")
     cells = base + "/cells"
-    recover_swap(cells)  # heal a pre-r12 crashed bare swap
     # fold the merge-on-read erasure queue first (the posture shared
     # by scd2_compact_closed and compact_minhash_index): post-
     # compaction probes drop the anti-join entirely
     if tombstones.pending(base):
         purge_ivf_index(spark, index_dir, None)
     before = parquet_file_count(cells)
-    # stage + ONE journaled swap (r12 review: the previous bare
-    # rename-pair swap left a crash window with cells/ missing that
-    # only a racy reader-side recover_swap could heal; the store
-    # already has journal machinery whose replay is recovery-locked)
+    # stage + ONE journaled swap: a crash can never leave cells/
+    # missing, and the replay is recovery-locked
     _token, stage = journal.new_stage(base)
     compact_parquet_into(
         spark, cells, os.path.join(stage, "cells"),
@@ -450,33 +433,19 @@ def topk_ivf_index(
     """Probe-many half: answer top-k from a persisted ``build_ivf_index``
     without touching the quantizer.
 
-    Loads the O(nlist × dim) centroid matrix (bounded driver collect),
+    Loads the O(nlist × dim) centroid matrix (a driver-side pyarrow read),
     ranks cells per query driver-side (queries are the small side by
     definition), and scans ONLY the probed ``qcell=`` partitions —
     partition pruning makes the probe I/O ~nprobe/nlist of the index
     regardless of corpus size. Scoring matches ``topk_ivf`` exactly
     (same deterministic quantizer ⟹ identical output, equality-tested).
     """
-    from datapipe_spark.operators.maintenance import recover_swap
-
-    # reader-side heal: complete a pending purge commit, then restore
-    # a crashed compaction swap (restore-only, no debris sweep — the
-    # journaled stores' reader/writer rule). Compaction commits its
-    # swap through the journal since r12, so the bare-swap heal below
-    # only fires on legacy crash states — and under the recovery lock,
-    # because two racing readers (or a reader beside a live writer)
-    # running the exists-check-then-rename restore concurrently could
-    # fail each other (r12 review)
+    # reader-side heal: complete a pending commit (no debris sweep —
+    # the journaled stores' reader/writer rule)
     _ivf_roll_forward(index_dir)
-    _cells = index_dir.rstrip("/") + "/cells"
-    if not os.path.isdir(_cells) and os.path.isdir(_cells + "__old"):
-        from datapipe_spark.operators.lease import recovery_guard
-
-        with recovery_guard(index_dir.rstrip("/")):
-            recover_swap(_cells)
     import numpy as np
 
-    cmat = _load_centroids(spark, index_dir)
+    cmat = _load_centroids(index_dir)
     qrows = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id").isin(list(query_ids)))
@@ -1602,12 +1571,9 @@ def purge_ivf_index(
 
     Returns ``{"purged_vecs", "touched_cells"}``.
     """
-    from datapipe_spark.operators.maintenance import recover_swap
-
     base = index_dir.rstrip("/")
     cells = base + "/cells"
     _ivf_roll_forward(base, sweep=True)
-    recover_swap(cells)  # heal a crashed compaction swap first
     # fold the merge-on-read queue: queued ids join the explicit
     # backlog and are cleared in this same journaled commit
     # (purge_ids=None is the maintenance-pass form)

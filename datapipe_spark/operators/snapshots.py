@@ -920,7 +920,7 @@ def overwrite_partitions(
     replaced — untouched partitions carry their parent's files by
     manifest reference, no rewrite. This is the idempotent-backfill
     write mode the batch layer's daily jobs use
-    (``plans/incremental.py``'s dynamic overwrite, reference batch
+    (``plans/incremental.py``'s partition swaps, reference batch
     design.md incremental loads): re-running a day replaces exactly
     that day. O(touched partitions), not O(table).
 

@@ -19,13 +19,15 @@ reference gets from Airflow running independent tasks concurrently.
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
+import shutil
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+from datapipe_spark.operators import journal
 from datapipe_spark.plans import marts
 from datapipe_spark.plans import quality as q
+from datapipe_spark.util import fresh_dir, run_concurrently
 
 # stage → builder; order matters (quality gate first, reconcile last)
 _MART_STAGES = {
@@ -39,19 +41,18 @@ _MART_STAGES = {
 def daily_batch_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """Run the full daily batch DAG into ``out_dir``; returns
     per-table row counts (the reference's quality_report stage)."""
-    counts: dict[str, int] = {}
-
     # 1. data_quality_check. In the reference's Airflow graph the gate
     # task runs strictly before the batch job because a failure stops
     # *deployment*. r5: the gate COMPUTES concurrently with the marts
     # (it has no data edge to them — ~1.5 s of quality scan no longer
     # serializes in front of the pool), but deployment order is kept
-    # by writing every mart to a staging dir and only RENAMING into
-    # out_dir after the whole pool — gate included — succeeded: a
-    # gate/mart failure leaves out_dir without a single overwritten
-    # table, exactly the fail-fast contract the sequential DAG had.
+    # by writing every mart to a journal staging dir and committing
+    # them into out_dir only after the whole pool — gate included —
+    # succeeded: a gate/mart failure leaves out_dir without a single
+    # overwritten table, exactly the fail-fast contract the sequential
+    # DAG had.
 
-    def _run_gate(_item=None) -> tuple:
+    def _run_gate() -> tuple:
         return "rule_violations", q.rule_violations(spark, sf_dir).count()
 
     # 2-4. spark_batch_job + dbt_run + lambda_reconciliation. The four
@@ -60,63 +61,45 @@ def daily_batch_pipeline(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
     # serving tables, but THIS implementation derives both sides of
     # the differential from the sources directly (quality.py), so it
     # has no data edge to the mart writes either — submit all six
-    # from one pool and let the scheduler interleave their jobs (the
+    # concurrently and let the scheduler interleave their jobs (the
     # same parallelism Airflow gets from independent tasks).
-    staging = os.path.join(out_dir, "_staging")
+    os.makedirs(out_dir, exist_ok=True)
+    journal.roll_forward(out_dir, sweep=True)  # writer entry
+    _token, stage = journal.new_stage(out_dir)
 
-    def _run_mart(item: tuple) -> tuple:
-        name, fn = item
+    def _run_mart(name: str, fn) -> tuple:
         df = fn(spark, sf_dir)
         # marts are O(dimension) rows: a handful of serving files beats
         # one per shuffle partition. repartition, not coalesce — a
         # coalesce here collapses each mart's final aggregation into
         # the 8 writer tasks (benched ~1.3 s slower per mart at sf0.1);
         # the extra shuffle moves only the small serving rows.
-        path = os.path.join(staging, name)
+        path = os.path.join(stage, name)
         df.repartition(8).write.mode("overwrite").parquet(path)
         return name, spark.read.parquet(path).count()
 
-    def _run_recon(_item=None) -> tuple:
+    def _run_recon() -> tuple:
         return "reconciliation", q.reconciliation(spark, sf_dir).count()
 
-    stages = list(_MART_STAGES.items())
-    with ThreadPoolExecutor(max_workers=len(stages) + 2) as pool:
-        futs = [pool.submit(_run_gate)]
-        futs += [pool.submit(_run_mart, it) for it in stages]
-        futs.append(pool.submit(_run_recon))
-        try:
-            counts.update(dict(f.result() for f in futs))
-        except Exception:
-            import shutil
-
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-    # publish: everything (gate included) succeeded — same-fs renames.
-    # Prior marts are renamed aside first and deleted only after every
-    # new rename lands, so a crash mid-publish leaves each mart either
-    # current or recoverable from _retired — never deleted-and-gone.
-    import shutil
-
-    retired = os.path.join(out_dir, "_retired")
-    shutil.rmtree(retired, ignore_errors=True)
-    os.makedirs(retired, exist_ok=True)
-    for name in _MART_STAGES:
-        dst = os.path.join(out_dir, name)
-        if os.path.exists(dst):
-            os.rename(dst, os.path.join(retired, name))
-    for name in _MART_STAGES:
-        os.rename(os.path.join(staging, name), os.path.join(out_dir, name))
-    shutil.rmtree(retired, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-    # report order matches the reference DAG: gate first, recon last
-    order = ["rule_violations", *_MART_STAGES, "reconciliation"]
-    return {k: counts[k] for k in order}
+    marts_fns = [partial(_run_mart, *it) for it in _MART_STAGES.items()]
+    try:
+        # results come back in argument order, which is the reference
+        # DAG's report order: gate first, marts, recon last
+        counts = dict(run_concurrently(spark, _run_gate, *marts_fns, _run_recon))
+    except Exception:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
+    # publish: everything (gate included) succeeded — the four marts
+    # land as ONE journaled commit, so a crash mid-publish rolls
+    # forward on the next run instead of leaving a mix of generations
+    swaps = [[os.path.join(stage, n), os.path.join(out_dir, n)] for n in _MART_STAGES]
+    journal.commit(out_dir, {"swaps": swaps})
+    journal.roll_forward(out_dir, sweep=True)
+    return counts
 
 
 def pipeline_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable form: run the DAG, return (table, n_rows)."""
-    from datapipe_spark.util import fresh_dir
-
     out = fresh_dir("daily_dag")
     counts = daily_batch_pipeline(spark, sf_dir, out)
     return spark.createDataFrame(

@@ -10,15 +10,15 @@ here:
   unit (``partition_unit``: "year" default, "month" for larger
   volumes — the partition unit must track data volume, not the metric
   grain: partitioning the 7-year/2.4k-row testdata by month meant 80
-  directories whose dynamic-overwrite commit protocol cost ~1.4 s per
-  increment vs 0.4 s at year grain; a 100 TB deployment sizes this to
-  month or day so each partition holds O(100 MB–1 GB)); an increment
-  recomputes ONLY the partitions that received new dates and swaps
-  them in with *dynamic partition overwrite* (the ``replaceWhere``
-  pattern — idempotent on re-run, no read-modify-write of untouched
-  partitions). A partition straddling the watermark is recomputed in
-  full from source, which is exactly dbt's ``unique_key`` replace
-  semantics at partition grain;
+  directories whose commit cost ~1.4 s per increment vs 0.4 s at year
+  grain; a 100 TB deployment sizes this to month or day so each
+  partition holds O(100 MB–1 GB)); an increment recomputes ONLY the
+  partitions that received new dates and swaps them in as whole
+  partition dirs (the ``replaceWhere`` pattern — idempotent on
+  re-run, no read-modify-write of untouched partitions). A partition
+  straddling the watermark is recomputed in full from source, which
+  is exactly dbt's ``unique_key`` replace semantics at partition
+  grain;
 - the one cross-date dependency in the metric — each customer's
   *first* order date, which drives the new-vs-returning split
   (A3/A4) — is carried as a tiny keyed *state table* that each
@@ -26,6 +26,12 @@ here:
   aggregating. This is the part a naive partition recompute gets
   wrong: a returning customer must not be re-counted as new just
   because the increment can't see their history.
+
+Both are staged under ``journal.new_stage`` and committed as ONE
+journal of whole-dir swaps (``operators/journal.py``): the state and
+the serving partitions advance together, and a crash at any
+filesystem step rolls forward on the next entry instead of losing the
+state (which would silently re-count returning customers as new).
 
 At 100 TB: each increment touches O(new data) + O(customers-in-chunk)
 state rows; the state merge is a groupBy on the customer key (same
@@ -36,12 +42,15 @@ table is never fully rewritten.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datapipe_spark.functions import ratio
+from datapipe_spark.operators import journal
 from datapipe_spark.plans.marts import _orders_base, _zero_money
+from datapipe_spark.util import fresh_dir, run_concurrently
 
 
 def _state_path(base: str) -> str:
@@ -54,12 +63,12 @@ def _table_path(base: str) -> str:
 
 def high_watermark(spark: SparkSession, base: str):
     """P8: ``SELECT MAX(date) FROM this`` over the serving table."""
+    journal.roll_forward(base)  # reader: complete a pending commit
     path = _table_path(base)
     # cheap local existence probe — the exception-based probe paid a
     # full (warn-logged) JVM analysis round trip on every first run.
-    # The read stays guarded: a dir a crashed prior write left behind
-    # (only _temporary/, no committed part files) must mean "first
-    # run", not an aborted pipeline.
+    # The read stays guarded: a dir holding no committed part files
+    # must mean "first run", not an aborted pipeline.
     if not os.path.isdir(path):
         return None
     try:
@@ -69,9 +78,9 @@ def high_watermark(spark: SparkSession, base: str):
 
 
 PARTITION_UNIT = "year"  # single default for the serving table's grain:
-# partition_start and apply_increment MUST agree on it — dynamic
-# partition overwrite only replaces same-valued partitions, so a
-# mixed-grain table would silently duplicate rows (see guard below)
+# partition_start and apply_increment MUST agree on it — the commit
+# only replaces same-valued partitions, so a mixed-grain table would
+# silently duplicate rows (see guard below)
 PARTITION_FMT = {"year": "yyyy", "month": "yyyy-MM"}
 _PART_RE = {"year": r"\d{4}", "month": r"\d{4}-\d{2}"}
 
@@ -102,10 +111,12 @@ def apply_increment(
     """
     _check_unit(unit)
     state_p, table_p = _state_path(base), _table_path(base)
+    os.makedirs(base, exist_ok=True)
+    journal.roll_forward(base, sweep=True)  # writer entry
     # mixed-grain guard: an increment written at a different unit than
-    # the table's existing partitions would DUPLICATE rows (dynamic
-    # overwrite replaces order_part=2024-03, leaving order_part=2024
-    # intact with the same dates inside) — refuse loudly instead
+    # the table's existing partitions would DUPLICATE rows (the commit
+    # replaces order_part=2024-03, leaving order_part=2024 intact with
+    # the same dates inside) — refuse loudly instead
     if os.path.isdir(table_p):
         import re
 
@@ -137,32 +148,13 @@ def apply_increment(
         )
     else:
         merged_state = chunk_first
-    # the merged state feeds BOTH the durability commit and the
-    # enrichment join: persist it so the merge aggregation runs once
-    # and the join doesn't wait on (or re-read) the parquet commit
+    # the merged state feeds BOTH the state write and the enrichment
+    # join: persist it so the merge aggregation runs once and the join
+    # doesn't wait on (or re-read) the state write
     merged_state = merged_state.persist()
-    # state is rebuilt atomically beside the old copy, then swapped in;
-    # one file — the state table is O(customers) keys, tiny next to
-    # data. repartition(1), not coalesce(1): coalesce would collapse
-    # the upstream state-merge aggregation into the single writer task
-    # (measured ~0.5 s/increment at sf0.1); repartition keeps the agg
-    # parallel and shuffles only the small result to one writer.
-    # r5 (round-3 ask): the state commit and the serving write are
-    # independent consumers of the persisted merge — submit the state
-    # write from a helper thread so it overlaps the (bigger) serving
-    # aggregation instead of serializing ~0.5 s in front of it. The
-    # rename below still happens only after BOTH finish, so the
-    # durability order (state swap after a complete serving write) is
-    # unchanged.
-    tmp = state_p + "_next"
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    committed = False
+    _token, stage = journal.new_stage(base)
+    state_s, table_s = _state_path(stage), _table_path(stage)
     try:
-        state_fut = pool.submit(
-            lambda: merged_state.repartition(1).write.mode("overwrite").parquet(tmp)
-        )
         enriched = orders_chunk.join(merged_state, "o_custkey")
         is_new = F.col("first_order_date") == F.col("order_date")
         # two-level aggregation (same shape as the full-recompute mart):
@@ -204,41 +196,44 @@ def apply_increment(
             ratio(F.col("new_customers"), F.col("unique_customers")).alias("acquisition_rate"),
             ratio(F.col("completed_orders"), F.col("total_orders")).alias("completion_rate"),
         )
-        (
-            # the daily mart is O(dates) rows — one writer task emits one
-            # file per partition (dynamic overwrite sorts by partition key
-            # internally), avoiding a per-partition task fleet for a few
-            # KB each (repartition(partition_key) benched 0.6 s/increment
-            # slower at sf0.1). A cluster deployment with a fact-sized
-            # result re-sizes this to `repartition(n, partition_key)` so
-            # each partition still lands in O(1) files.
-            result.repartition(1)
+        # both writes are independent consumers of the persisted merge:
+        # run them concurrently so the (small) state write overlaps the
+        # bigger serving aggregation. One file for the state — it is
+        # O(customers) keys, tiny next to data. repartition(1), not
+        # coalesce(1): coalesce would collapse the upstream state-merge
+        # aggregation into the single writer task (measured
+        # ~0.5 s/increment at sf0.1); repartition keeps the agg
+        # parallel and shuffles only the small result to one writer.
+        # The daily mart is O(dates) rows — one writer task emits one
+        # file per partition, avoiding a per-partition task fleet for a
+        # few KB each (repartition(partition_key) benched
+        # 0.6 s/increment slower at sf0.1). A cluster deployment with a
+        # fact-sized result re-sizes this to `repartition(n,
+        # partition_key)` so each partition still lands in O(1) files.
+        run_concurrently(
+            spark,
+            lambda: merged_state.repartition(1).write.mode("overwrite").parquet(state_s),
+            lambda: result.repartition(1)
             .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("order_part")
-            .parquet(table_p)
+            .parquet(table_s),
         )
-        state_fut.result()  # surface any state-write failure before the swap
-        committed = True
+    except Exception:
+        shutil.rmtree(stage, ignore_errors=True)
+        raise
     finally:
-        # runs on EVERY exit — including an AnalysisException while the
-        # serving plan is still being built: join the state thread
-        # unconditionally (shutdown is safe with no submitted work, and
-        # must precede the tmp cleanup so a still-running writer cannot
-        # race it) and release the cache (the round-2
-        # plan-cache-leak class). On failure the staging dir is removed
-        # rather than left for a retry to overwrite.
-        pool.shutdown(wait=True)
         merged_state.unpersist()
-        if not committed:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-
-    import shutil
-
-    shutil.rmtree(state_p, ignore_errors=True)
-    os.rename(tmp, state_p)
+    # ONE journal swaps in the merged state AND every partition the
+    # chunk touched (a partition straddling the watermark is replaced
+    # whole — dbt's unique_key replace at partition grain), so the
+    # serving table's watermark advances only when the state does
+    swaps = [[state_s, state_p]] + [
+        [os.path.join(table_s, d), os.path.join(table_p, d)]
+        for d in sorted(os.listdir(table_s))
+        if d.startswith("order_part=")
+    ]
+    journal.commit(base, {"swaps": swaps})
+    journal.roll_forward(base, sweep=True)
 
 
 def incremental_daily_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -246,8 +241,6 @@ def incremental_daily_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     in two increments split at the 60 % date point, then read the
     serving table back. Must equal the full recompute
     (oracle: ``DAILY_BUSINESS_METRICS_SQL``)."""
-    from datapipe_spark.util import fresh_dir
-
     base = fresh_dir("incremental_dbm")
     o = _orders_base(spark, sf_dir).persist()
     lo, hi = o.agg(F.min("order_date"), F.max("order_date")).first()

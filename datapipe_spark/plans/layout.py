@@ -4,10 +4,12 @@ The reference relies on Iceberg's ``rewrite_data_files`` table
 maintenance (task6-ecommerce-tables-config.yaml:51-61; batch
 design.md:193). ``operators/maintenance.py`` carries the parquet
 stand-ins (compaction, range clustering, z-order); this module drives
-the clustering rewrite end to end as a registry query so the driver's
-hash oracle attests content-preservation — the data-skipping win
-itself (file-footer min/max disjointness, minority-touch predicates)
-is stats-gated in tests/test_pipeline_ops.py.
+the clustering and z-order rewrites end to end as registry queries so
+the driver's hash oracle attests content-preservation — the
+data-skipping win itself (file-footer min/max disjointness,
+minority-touch predicates) is stats-gated in tests/test_pipeline_ops.py.
+Each entry rewrites its scratch copy of lineitem into a second scratch
+dir: nothing reads the copy, so no directory swap is needed.
 """
 
 from __future__ import annotations
@@ -15,15 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from datapipe_spark.operators.maintenance import cluster_parquet
+from datapipe_spark.operators.maintenance import cluster_parquet_into, zorder_parquet_into
 from datapipe_spark.sources.tables import load_table
 from datapipe_spark.util import fresh_dir
 
 
 def lineitem_cluster_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Copy lineitem to scratch, range-cluster it by ``l_shipdate``
-    (one sampled range shuffle + per-file sort + atomic dir swap),
-    then read the REWRITTEN table back through a first-ship-year
+    (one sampled range shuffle + per-file sort) into a second scratch
+    dir, then read the REWRITTEN table back through a first-ship-year
     predicate — the scan that now file-skips on footer stats — and
     roll up by ship month.
 
@@ -32,12 +34,14 @@ def lineitem_cluster_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     are summed as DECIMAL(18,2) and cast to double only in the final
     projection (oracle decimal discipline).
     """
-    path = fresh_dir("lineitem_clustered")
+    copy, path = fresh_dir("lineitem_cluster_src"), fresh_dir("lineitem_clustered")
     src = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_quantity", "l_extendedprice"
     )
-    src.write.mode("overwrite").parquet(path)
-    cluster_parquet(spark, path, ["l_shipdate"], target_bytes=4 * 1024 * 1024)
+    src.write.mode("overwrite").parquet(copy)
+    cluster_parquet_into(
+        spark, copy, path, ["l_shipdate"], target_bytes=4 * 1024 * 1024
+    )
     t = spark.read.parquet(path)
     first_year = src.select(F.min(F.year("l_shipdate"))).first()[0]
     dec = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
@@ -71,11 +75,11 @@ GROUP BY 1, 2
 def lineitem_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Copy lineitem to scratch, Z-ORDER it on ``(l_partkey,
     l_suppkey)`` (per-column quantile-rank bucketing + Morton bit
-    interleave + one sampled range shuffle — ``zorder_parquet``), then
-    read the REWRITTEN table back through a compound box predicate on
-    BOTH clustered columns — the scan shape single-column clustering
-    cannot serve (footer pruning multiplies across dimensions) — and
-    roll up per part.
+    interleave + one sampled range shuffle — ``zorder_parquet_into``)
+    into a second scratch dir, then read the REWRITTEN table back
+    through a compound box predicate on BOTH clustered columns — the
+    scan shape single-column clustering cannot serve (footer pruning
+    multiplies across dimensions) — and roll up per part.
 
     The oracle aggregates the ORIGINAL table: hash equality proves the
     multi-dimensional rewrite dropped, duplicated, and corrupted
@@ -83,19 +87,17 @@ def lineitem_zorder_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplicative box pruning) is stats-gated in
     tests/test_pipeline_ops.py::test_zorder_parquet_prunes_on_both_columns.
     """
-    from datapipe_spark.operators.maintenance import zorder_parquet
-
-    path = fresh_dir("lineitem_zordered")
+    copy, path = fresh_dir("lineitem_zorder_src"), fresh_dir("lineitem_zordered")
     src = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_quantity", "l_extendedprice"
     )
-    src.write.mode("overwrite").parquet(path)
+    src.write.mode("overwrite").parquet(copy)
     # 6 bits/dim ⇒ 4096 distinct z-values — ample file-level
     # selectivity for this table's ≲100 files (bits size the CODEGEN
     # and quantile-sketch cost quadratically-ish; 8 bits only starts
     # paying off past ~10k files)
-    zorder_parquet(
-        spark, path, ["l_partkey", "l_suppkey"],
+    zorder_parquet_into(
+        spark, copy, path, ["l_partkey", "l_suppkey"],
         target_bytes=4 * 1024 * 1024, bits_per_dim=6,
     )
     t = spark.read.parquet(path)

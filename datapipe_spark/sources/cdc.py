@@ -213,8 +213,8 @@ def write_archive(
     connectors/orders-s3-sink-connector.json:14-21; hourly for the
     bulk sink). Partition depth must track event density: hourly dirs
     over a multi-year low-rate stream produce the small-file
-    pathology that ``operators.maintenance.compact_parquet`` exists
-    to fix — pick the coarsest granularity whose partitions stay
+    pathology that ``operators.maintenance.compact_parquet_into``
+    exists to fix — pick the coarsest granularity whose partitions stay
     under ~1 GB. 128 MB target files come from upstream partition
     sizing; at 100 TB add the compaction pass."""
     cols = _GRANULARITY_COLS[: _GRANULARITY_COLS.index(granularity) + 1]

@@ -21,11 +21,14 @@ def test_daily_batch_pipeline_composes(spark, sf_dir):
 
 def test_dag_failure_publishes_nothing(spark, tmp_path):
     """Fail-fast deployment contract (staged publish): when any pooled
-    stage fails, out_dir must end up with NO mart tables and no staging
-    residue — the behavior the strictly-sequential reference DAG had."""
+    stage fails, out_dir must end up with NO mart tables, no staging
+    residue and no commit journal — the behavior the
+    strictly-sequential reference DAG had."""
     import os
 
     import pytest
+
+    from datapipe_spark.operators import journal
 
     out = str(tmp_path / "dagout")
     with pytest.raises(Exception):
@@ -33,7 +36,40 @@ def test_dag_failure_publishes_nothing(spark, tmp_path):
     assert not any(
         os.path.isdir(os.path.join(out, n)) for n in dag._MART_STAGES
     )
-    assert not os.path.isdir(os.path.join(out, "_staging"))
+    assert not [n for n in os.listdir(out) if n.startswith(".staging-")]
+    assert not os.path.exists(os.path.join(out, journal.JOURNAL))
+
+
+def test_dag_and_increment_pooled_jobs_keep_job_group(spark, sf_dir, tmp_path):
+    """The daily DAG and the incremental increment run their writes on
+    worker threads; every job those threads submit must carry the
+    caller's job group, so no job of the call lands outside it."""
+    import uuid
+
+    from datapipe_spark.plans import incremental as inc
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    orders = marts._orders_base(spark, sf_dir)
+    calls = {
+        "pipeline_summary": lambda: dag.pipeline_summary(spark, sf_dir),
+        "apply_increment": lambda: inc.apply_increment(
+            spark, orders, str(tmp_path / "incr")
+        ),
+    }
+    for name, call in calls.items():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup(None))
+        group = f"test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert set(tracker.getJobIdsForGroup(None)) - before == set(), name
+        assert tracker.getJobIdsForGroup(group), name
 
 
 def test_pipeline_summary_oracle(spark, sf_dir):

@@ -176,15 +176,28 @@ def test_watermark_reads_pending_journal_meta_first(tmp_path):
     assert journal.watermark(d) == -1  # nothing recorded yet
 
 
+_PROTOCOL_LITERALS = (
+    "commit-pending.json",
+    ".staging-",
+    "__old",
+    "_retired",
+    "_next",
+    "__compacting",
+    "__clustering",
+    "__zordering",
+)
+
+
 def test_commit_protocol_lives_only_in_journal_module():
     """The journal file name and the staging prefix are spelled only in
-    ``operators/journal.py``: a store that needs the protocol calls it
-    rather than carrying another copy."""
+    ``operators/journal.py``, and no module keeps the suffixes of the
+    hand-rolled directory swaps it replaced: code that replaces a live
+    directory calls the journal rather than carrying another copy."""
     pkg = pathlib.Path(journal.__file__).resolve().parents[1]
     offenders = [
         str(p.relative_to(pkg))
         for p in sorted(pkg.rglob("*.py"))
         if p.resolve() != pathlib.Path(journal.__file__).resolve()
-        and any(s in p.read_text() for s in ("commit-pending.json", ".staging-"))
+        and any(s in p.read_text() for s in _PROTOCOL_LITERALS)
     ]
     assert offenders == []

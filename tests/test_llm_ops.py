@@ -2702,7 +2702,7 @@ def test_purge_ivf_index_frozen_quantizer_equality(spark, sf_dir, tmp_path):
         .filter(f"NOT ({sim.IVF_PURGED_PRED})")
         .select("vec_id", sim._as_double("embedding").alias("v"))
     )
-    sim._cell_assignments(e, sim._load_centroids(spark, idx)).write.mode(
+    sim._cell_assignments(e, sim._load_centroids(idx)).write.mode(
         "overwrite"
     ).partitionBy("qcell").parquet(f"{ref}/cells")
     got = sorted(map(tuple, out.collect()))
@@ -2986,12 +2986,18 @@ def test_purge_ivf_after_compaction_composes(spark, sf_dir, tmp_path):
     )
 
 
-def _arrow_rows(path):
+def _arrow_rows(path, round_floats=False):
     """Row multiset of a parquet dir (hive partitions included), read
-    without Spark."""
+    without Spark; ``round_floats`` rounds doubles to 9 places."""
     import pyarrow.parquet as pq
 
-    return sorted(map(repr, pq.read_table(path).to_pylist()))
+    rows = pq.read_table(path).to_pylist()
+    if round_floats:
+        rows = [
+            {k: round(v, 9) if isinstance(v, float) else v for k, v in r.items()}
+            for r in rows
+        ]
+    return sorted(map(repr, rows))
 
 
 def _band_index_append_case(spark, tmp_path):
@@ -3147,6 +3153,54 @@ def _ivf_queue_case(spark, tmp_path):
     return template, op, state
 
 
+def _incremental_increment_case(spark, tmp_path):
+    """An incremental serving table holding one increment, and the
+    second chunk (everything from the watermark's partition on): one
+    commit swaps in the merged first-order state and every touched
+    partition."""
+    from datapipe_spark.plans import incremental as inc
+    from datapipe_spark.plans.marts import _orders_base
+    from tests.conftest import SF_DIR
+
+    o = _orders_base(spark, SF_DIR)
+    lo, hi = o.agg(F.min("order_date"), F.max("order_date")).first()
+    cutoff = lo + (hi - lo) * 6 // 10
+    template = str(tmp_path / "tmpl")
+    inc.apply_increment(spark, o.filter(F.col("order_date") <= F.lit(cutoff)), template)
+    start = inc.partition_start(inc.high_watermark(spark, template))
+    chunk = o.filter(F.col("order_date") >= F.lit(start))
+
+    def op(d):
+        inc.apply_increment(spark, chunk, d)
+
+    def state(d):
+        return _arrow_rows(inc._table_path(d)), _arrow_rows(inc._state_path(d))
+
+    return template, op, state
+
+
+def _dag_publish_case(spark, tmp_path):
+    """A published daily-DAG out_dir, and a republish over it: one
+    commit swaps in all four marts."""
+    from datapipe_spark.plans import dag
+    from tests.conftest import SF_DIR
+
+    template = str(tmp_path / "tmpl")
+    dag.daily_batch_pipeline(spark, SF_DIR, template)
+
+    def op(d):
+        dag.daily_batch_pipeline(spark, SF_DIR, d)
+
+    def state(d):
+        # doubles rounded: a mart's float sums may differ in the last
+        # bit between two runs of the same plan
+        return {
+            n: _arrow_rows(f"{d}/{n}", round_floats=True) for n in dag._MART_STAGES
+        }
+
+    return template, op, state
+
+
 @pytest.mark.parametrize(
     "case",
     [
@@ -3155,6 +3209,8 @@ def _ivf_queue_case(spark, tmp_path):
         _band_index_queue_case,
         _scd2_queue_case,
         _ivf_queue_case,
+        _incremental_increment_case,
+        _dag_publish_case,
     ],
     ids=[
         "band_index_append",
@@ -3162,6 +3218,8 @@ def _ivf_queue_case(spark, tmp_path):
         "band_index_queue",
         "scd2_queue",
         "ivf_queue",
+        "incremental_increment",
+        "dag_publish",
     ],
 )
 def test_store_crash_sweep_every_fs_step(spark, tmp_path, crash_gate, case):
@@ -3233,7 +3291,7 @@ def test_probe_plan_build_submits_no_spark_job(spark, tmp_path):
 def test_ivf_index_reads_submit_no_schema_inference_job(spark, tmp_path):
     """The IVF index reads centroids/ and cells/ under their declared
     schemas: building the purge's survivor plan submits no Spark job,
-    and loading the quantizer runs only its own bounded collect."""
+    and loading the quantizer (a driver-side pyarrow read) none either."""
     import os as _os
     import uuid
 
@@ -3274,8 +3332,8 @@ def test_ivf_index_reads_submit_no_schema_inference_job(spark, tmp_path):
     assert kept.schema.simpleString() == (
         "struct<vec_id:bigint,v:array<double>,qcell:int>"
     )
-    cmat, n_jobs = jobs_of(lambda: sim._load_centroids(spark, idx))
-    assert n_jobs == 1 and cmat.shape == (5, 8)
+    cmat, n_jobs = jobs_of(lambda: sim._load_centroids(idx))
+    assert n_jobs == 0 and cmat.shape == (5, 8)
 
 
 def test_compact_minhash_index_pooled_jobs_keep_job_group(spark, tmp_path):

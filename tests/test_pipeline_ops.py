@@ -31,7 +31,7 @@ def test_incremental_equals_full_recompute(spark, sf_dir):
 
 def test_incremental_is_idempotent_per_chunk(spark, sf_dir):
     """Re-applying the same increment must not change the table
-    (dynamic partition overwrite replaces, never appends)."""
+    (the commit swaps whole partitions, never appends)."""
     base = fresh_dir("test_incr_idem")
     o = marts._orders_base(spark, sf_dir)
     inc.apply_increment(spark, o, base)
@@ -41,8 +41,8 @@ def test_incremental_is_idempotent_per_chunk(spark, sf_dir):
 
 
 def test_incremental_refuses_mixed_partition_grain(spark, sf_dir):
-    """Dynamic partition overwrite replaces only same-VALUED
-    partitions, so applying an increment at a different unit than the
+    """The increment commit replaces only same-VALUED partitions, so
+    applying an increment at a different unit than the
     table's existing grain would silently duplicate every re-derived
     date (order_part=2024 coexisting with order_part=2024-03). The
     guard must refuse instead."""
@@ -109,27 +109,28 @@ def test_archive_hour_granularity_layout_and_pruning(spark, sf_dir):
 
 
 def test_compact_parquet_reduces_files_preserves_rows(spark, sf_dir):
-    path = fresh_dir("test_compact")
+    path, out = fresh_dir("test_compact"), fresh_dir("test_compact_out")
     df = spark.range(10_000).withColumn("k", F.col("id") % 7)
     df.repartition(64).write.mode("overwrite").parquet(path)
     before_files = maintenance.parquet_file_count(path)
     before_rows = _rows(spark.read.parquet(path))
-    after_files = maintenance.compact_parquet(spark, path)
+    maintenance.compact_parquet_into(spark, path, out)
+    after_files = maintenance.parquet_file_count(out)
     assert after_files < before_files
     assert after_files == 1  # tiny table → single target file
-    assert _rows(spark.read.parquet(path)) == before_rows
+    assert _rows(spark.read.parquet(out)) == before_rows
 
 
 def test_compact_partitioned_table_keeps_layout(spark, sf_dir):
-    path = fresh_dir("test_compact_part")
+    path, out = fresh_dir("test_compact_part"), fresh_dir("test_compact_part_out")
     df = spark.range(5_000).withColumn("part", (F.col("id") % 3).cast("int"))
     df.repartition(16).write.mode("overwrite").partitionBy("part").parquet(path)
     before_rows = _rows(spark.read.parquet(path))
-    maintenance.compact_parquet(spark, path, partition_cols=["part"])
-    assert sorted(d for d in os.listdir(path) if d.startswith("part=")) == [
+    maintenance.compact_parquet_into(spark, path, out, partition_cols=["part"])
+    assert sorted(d for d in os.listdir(out) if d.startswith("part=")) == [
         "part=0", "part=1", "part=2",
     ]
-    assert _rows(spark.read.parquet(path)) == before_rows
+    assert _rows(spark.read.parquet(out)) == before_rows
 
 
 def test_cluster_parquet_disjoint_ranges_and_pruning(spark, sf_dir):
@@ -138,7 +139,7 @@ def test_cluster_parquet_disjoint_ranges_and_pruning(spark, sf_dir):
     intersects a small fraction of file footers — the data-skipping
     win an unclustered layout cannot give (there every file spans the
     whole key range)."""
-    path = fresh_dir("test_cluster")
+    path, out = fresh_dir("test_cluster"), fresh_dir("test_cluster_out")
     src = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
         "l_orderkey", "l_shipdate", "l_quantity"
     )
@@ -155,12 +156,13 @@ def test_cluster_parquet_disjoint_ranges_and_pruning(spark, sf_dir):
     assert len(covering(before, pred_lo, pred_hi)) == len(before)  # no skipping
     before_rows = _rows(spark.read.parquet(path))
 
-    n_files = maintenance.cluster_parquet(
-        spark, path, ["l_shipdate"], target_bytes=16 * 1024
+    maintenance.cluster_parquet_into(
+        spark, path, out, ["l_shipdate"], target_bytes=16 * 1024
     )
-    after = maintenance.file_column_ranges(path, "l_shipdate")
+    n_files = maintenance.parquet_file_count(out)
+    after = maintenance.file_column_ranges(out, "l_shipdate")
     assert len(after) == n_files and n_files >= 4
-    assert _rows(spark.read.parquet(path)) == before_rows
+    assert _rows(spark.read.parquet(out)) == before_rows
     # files ordered by min: each file's range must not reach past the
     # next file's min (equal boundary keys may share two files)
     ordered = sorted(after, key=lambda r: (r[1], r[2]))
@@ -171,7 +173,7 @@ def test_cluster_parquet_disjoint_ranges_and_pruning(spark, sf_dir):
     assert len(touched) < len(after) / 2
     # and the filtered read over the clustered table is still correct
     got = (
-        spark.read.parquet(path)
+        spark.read.parquet(out)
         .filter((F.col("l_shipdate") >= pred_lo) & (F.col("l_shipdate") <= pred_hi))
         .count()
     )
@@ -200,41 +202,41 @@ def test_zorder_parquet_prunes_on_both_columns(spark, sf_dir):
     column must skip files (single-column clustering can only serve
     one), and a compound box predicate prunes hardest. Content must be
     preserved."""
-    path = fresh_dir("test_zorder")
+    path, out = fresh_dir("test_zorder"), fresh_dir("test_zorder_out")
     src = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).select(
         "l_orderkey", "l_partkey", "l_suppkey"
     )
     src.repartition(8).write.mode("overwrite").parquet(path)
     before_rows = _rows(spark.read.parquet(path))
 
-    def touched(col, lo, hi):
-        rng = maintenance.file_column_ranges(path, col)
+    def touched(col, lo, hi, table=out):
+        rng = maintenance.file_column_ranges(table, col)
         return len([r for r in rng if not (r[2] < lo or r[1] > hi)]), len(rng)
 
     pmax = src.select(F.max("l_partkey")).first()[0]
     smax = src.select(F.max("l_suppkey")).first()[0]
     # worst-case shuffled layout: a 10% range on either column touches
     # every file footer
-    assert touched("l_partkey", 0, pmax // 10)[0] == 8
-    assert touched("l_suppkey", 0, smax // 10)[0] == 8
+    assert touched("l_partkey", 0, pmax // 10, path)[0] == 8
+    assert touched("l_suppkey", 0, smax // 10, path)[0] == 8
 
-    n_files = maintenance.zorder_parquet(
-        spark, path, ["l_partkey", "l_suppkey"], target_bytes=6 * 1024
+    maintenance.zorder_parquet_into(
+        spark, path, out, ["l_partkey", "l_suppkey"], target_bytes=6 * 1024
     )
-    assert n_files >= 6
-    assert _rows(spark.read.parquet(path)) == before_rows
+    assert maintenance.parquet_file_count(out) >= 6
+    assert _rows(spark.read.parquet(out)) == before_rows
     pt, total = touched("l_partkey", 0, pmax // 10)
     st, _ = touched("l_suppkey", 0, smax // 10)
     assert pt < total * 0.7 and st < total * 0.7
     # compound box predicate: multiplicative pruning
     box = [
         r
-        for r in maintenance.file_column_ranges(path, "l_partkey")
+        for r in maintenance.file_column_ranges(out, "l_partkey")
         if not (r[2] < 0 or r[1] > pmax // 10)
     ]
     sup = {
         r[0]
-        for r in maintenance.file_column_ranges(path, "l_suppkey")
+        for r in maintenance.file_column_ranges(out, "l_suppkey")
         if not (r[2] < 0 or r[1] > smax // 10)
     }
     both = [r for r in box if r[0] in sup]
@@ -242,7 +244,7 @@ def test_zorder_parquet_prunes_on_both_columns(spark, sf_dir):
     assert len(both) < total * 0.5
     # filtered read correctness over the rewritten table
     got = (
-        spark.read.parquet(path)
+        spark.read.parquet(out)
         .filter((F.col("l_partkey") <= pmax // 10) & (F.col("l_suppkey") <= smax // 10))
         .count()
     )
@@ -1486,83 +1488,3 @@ def test_point_in_interval_left_join_null_payload_not_duplicated(spark):
         (2, None),
     ]
 
-
-def test_write_train_shards_physical_loader_order(spark, sf_dir):
-    """The materialized shard layout must be readable front-to-back in
-    loader order with no read-time shuffle: every parquet file inside a
-    shard_id=*/ partition carries pos strictly ascending in physical
-    row order, each shard's pos set is contiguous from 1, and every
-    document lands exactly once with its text."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from datapipe_spark.operators.maintenance import write_train_shards
-    from datapipe_spark.sources.tables import load_table
-    from datapipe_spark.util import fresh_dir
-
-    out = fresh_dir("test_train_shards")
-    stats = write_train_shards(spark, sf_dir, out)
-    assert stats["n_docs"] == load_table(spark, sf_dir, "documents").count()
-
-    shard_dirs = sorted(glob.glob(os.path.join(out, "shard_id=*")))
-    assert len(shard_dirs) == stats["n_shards"]
-    total = 0
-    for sd in shard_dirs:
-        pos_all = []
-        for f in sorted(glob.glob(os.path.join(sd, "*.parquet"))):
-            t = pq.read_table(f, columns=["pos", "text"])
-            pos = t.column("pos").to_pylist()
-            # physical row order inside each file IS loader order
-            assert pos == sorted(pos)
-            assert all(x is not None for x in t.column("text").to_pylist())
-            pos_all.extend(pos)
-        assert sorted(pos_all) == list(range(1, len(pos_all) + 1))
-        total += len(pos_all)
-    assert total == stats["n_docs"]
-
-
-def test_recover_swap_heals_every_crash_state(spark, sf_dir):
-    """The bare dir-swap rewrites (compact/cluster/zorder, the IVF
-    cells compaction) have exactly three crash states; recover_swap
-    must heal all of them — in particular the 'live dir missing,
-    __old holds the data' window the scd2 r9 advisory flagged — and
-    readers must restore without sweeping a possibly-live rewrite's
-    staging."""
-    import shutil as _sh
-
-    from datapipe_spark.operators.maintenance import (
-        compact_parquet,
-        recover_swap,
-    )
-
-    path = fresh_dir("recover_swap")
-    src = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
-    src.write.mode("overwrite").parquet(path)
-    want = sorted(map(tuple, spark.read.parquet(path).collect()))
-
-    # state 1: crash after writing __compacting, before any rename
-    _sh.copytree(path, path + "__compacting")
-    assert recover_swap(path) is False  # reader: nothing to restore
-    assert os.path.isdir(path + "__compacting")  # reader did NOT sweep
-    recover_swap(path, sweep=True)
-    assert not os.path.isdir(path + "__compacting")
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-
-    # state 2: crash between the two renames — live dir GONE
-    os.rename(path, path + "__old")
-    assert recover_swap(path) is True  # reader restores
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
-
-    # state 3: crash before the final debris rmtree
-    _sh.copytree(path, path + "__old")
-    assert recover_swap(path) is False
-    assert os.path.isdir(path + "__old")  # reader leaves debris
-    recover_swap(path, sweep=True)
-    assert not os.path.isdir(path + "__old")
-
-    # and a real rewrite entered in state 2 self-heals end to end
-    os.rename(path, path + "__old")
-    n = compact_parquet(spark, path, target_bytes=1 << 30)
-    assert n >= 1
-    assert sorted(map(tuple, spark.read.parquet(path).collect())) == want
